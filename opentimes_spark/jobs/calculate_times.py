@@ -100,15 +100,7 @@ def _slice_ids(df: DataFrame, lo: int, hi: int) -> DataFrame:
 
 
 def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
-    from opentimes_spark.io.write import write_sorted_partitioned
-    from opentimes_spark.operators.matrix import HaversineRouter
-    from opentimes_spark.plans.pipeline import (
-        build_blockloc,
-        build_cenloc,
-        build_destpoint,
-        compute_times,
-        write_public,
-    )
+    from opentimes_spark.plans.pipeline import build_blockloc, build_cenloc
     from opentimes_spark.session import get_spark
 
     spark = spark or get_spark("calculate_times")
@@ -123,8 +115,31 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     # nationally) but its lineage is the full block-grain PIP join; the
     # job reads it five times (center collect, destination broadcast,
     # matrix origins, the two points writes).  Cache it so the spatial
-    # chain runs once.
+    # chain runs once.  Every cache this pass creates is released in the
+    # finally, so passes in a long-lived session do not pile them up.
     cenloc = build_cenloc(blockloc, args.geography).cache()
+    cached = [cenloc]
+    try:
+        return _publish(args, cenloc, cached)
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _publish(args: argparse.Namespace, cenloc: DataFrame, cached: list) -> dict:
+    """Route ``args.state``'s origins to its destinations and write the
+    five public datasets; frames persisted on the way go to ``cached``."""
+    from pyspark.sql import Observation
+
+    from opentimes_spark.io.write import write_sorted_partitioned
+    from opentimes_spark.operators.matrix import HaversineRouter
+    from opentimes_spark.plans.pipeline import (
+        build_destpoint,
+        compute_times,
+        od_cols,
+        write_public,
+    )
+
     state_rows = cenloc.filter(F.col("geoid").startswith(args.state))
     center = state_rows.agg(
         F.avg("x_4326").alias("lon"), F.avg("y_4326").alias("lat")
@@ -142,6 +157,7 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
         HaversineRouter,
         centroid_type=args.centroid_type,
         max_split_size=args.max_split_size,
+        persisted=cached,
     )
     keys = dict(
         version=args.version, mode=args.mode, year=args.year,
@@ -152,15 +168,11 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     # no second pass over the (expensive) matrix lineage for metadata,
     # the at-scale replacement for the reference's separate count
     # queries (calculate_times.py:107-133)
-    from pyspark.sql import Observation
-
     times_obs = Observation("times_metrics")
     write_public(
         times, os.path.join(args.out, "times"), observation=times_obs, **keys
     )
     # the four sibling datasets of the reference's step 8
-    from opentimes_spark.plans.pipeline import od_cols
-
     lon, lat = od_cols(args.centroid_type)
     # the points writes scan origins/destinations anyway — ride their
     # counts on Observations instead of re-executing the (expensive)
@@ -169,23 +181,31 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     missing_obs = Observation("missing_metrics")
     origin_obs = Observation("origin_metrics")
     dest_obs = Observation("dest_metrics")
+    # each sibling is dimension-sized: one file.  The points and the
+    # metadata read the filled cenloc cache (dimension-sized too), so a
+    # narrow coalesce(1) is enough.  The missing pairs are few but read
+    # the whole matrix: repartition(1) shuffles only the null-duration
+    # rows and keeps the matrix scan (and any recompute of a lost cached
+    # block's routing) parallel, where coalesce(1) would run it in one
+    # task.
     for name, df, obs in (
         ("points/origin", origins.select(
-            F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")), origin_obs),
+            F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")
+        ).coalesce(1), origin_obs),
         ("points/destination", destinations.select(
-            F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")), dest_obs),
-        ("missing_pairs", missing, missing_obs),
-        ("metadata", metadata, None),
+            F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")
+        ).coalesce(1), dest_obs),
+        ("missing_pairs", missing.repartition(1), missing_obs),
+        ("metadata", metadata.coalesce(1), None),
     ):
         write_sorted_partitioned(df, os.path.join(args.out, name), observation=obs)
-    summary = {
+    return {
         "n_times": times_obs.get["n"],
         "n_missing": missing_obs.get["n"],
         "n_origins": origin_obs.get["n"],
         "n_destinations": dest_obs.get["n"],
         "out": args.out,
     }
-    return summary
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from opentimes_spark.io import snapshots
 from opentimes_spark.operators import dedup as D
 from opentimes_spark.operators import similarity as S
+from opentimes_spark.session import get_spark
 
 # Thresholds — module constants so tests and operators can tune them.
 LEDGER_MAX_FILES = 16          # fragment count before compaction
@@ -415,12 +416,9 @@ def main(argv: list[str] | None = None) -> None:
                     help="fraction of docs treated as today's ingest")
     args = ap.parse_args(argv)
 
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("maintain_indexes")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
+    # the job's own master (every core), with the engine conf and the
+    # partition count sized from it
+    spark = get_spark("maintain_indexes", master="local[*]")
     docs = spark.read.parquet(os.path.join(args.sf_dir, "documents.parquet"))
     emb = spark.read.parquet(os.path.join(args.sf_dir, "embeddings.parquet"))
     # deterministic batch split: md5 coin on the id, like sample_systematic

@@ -371,9 +371,18 @@ def compute_times(
     centroid_type: str = "weighted",
     max_split_size: int = 5000,
     num_chunks: int | None = None,
+    persisted: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """X3 over centroid points → (times, missing_pairs, metadata).
-    Column choice by centroid type mirrors OD_COLS (utils/times.py:310-313)."""
+    Column choice by centroid type mirrors OD_COLS (utils/times.py:310-313).
+
+    The routed matrix is persisted, so the range-sampling job of the
+    sorted write, the ``times`` write and the ``missing_pairs`` write
+    all read one routed copy: each OD cell goes to the router once.
+    ``persist`` rather than ``localCheckpoint``: a lost cached block is
+    recomputed from the lineage, a lost local checkpoint fails the job.
+    The persisted frame is appended to ``persisted`` so the caller can
+    ``unpersist`` it once the writes are done."""
     lon, lat = od_cols(centroid_type)
     o = origins_cenloc.select(
         F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")
@@ -383,7 +392,9 @@ def compute_times(
     )
     matrix = travel_time_matrix(
         o, d, router_factory, max_split_size=max_split_size, num_chunks=num_chunks
-    )
+    ).persist()
+    if persisted is not None:
+        persisted.append(matrix)
     times, missing = split_times_missing(matrix)
     # Metadata stays LAZY: eager o.count()/d.count() here would each
     # re-execute the full blockloc→cenloc lineage (a Python-worker PIP

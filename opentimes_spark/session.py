@@ -6,6 +6,14 @@ handling), partition-column type inference off (the reference keeps Hive
 partition values as zero-padded strings: opentimes
 data/src/create_public_files.py:79 ``hive_types_autocast=false``), and
 Arrow enabled for the pandas-UDF operators.
+
+``spark.sql.shuffle.partitions`` defaults to the running context's
+``defaultParallelism``: the N of ``local[N]``, the JVM's core count for
+``local[*]``, the executors' total cores on a cluster.  An explicit
+``shuffle_partitions=`` argument, then ``SPARK_SHUFFLE_PARTITIONS``,
+override it.  A cached plan keeps its partition count (AQE does not
+coalesce it), so a fixed count far above the cores buys only per-task
+overhead on every stage that reads the cache.
 """
 
 from __future__ import annotations
@@ -14,7 +22,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
+
+def default_master() -> str:
+    """``local[N]`` with N = ``SPARK_GRAFT_CPUS`` (default 32)."""
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+
+
+def shuffle_partitions_for(
+    spark: SparkSession, shuffle_partitions: int | None = None
+) -> int:
+    """The ``spark.sql.shuffle.partitions`` that ``get_spark`` sets on
+    ``spark``: ``shuffle_partitions`` if given, else
+    ``SPARK_SHUFFLE_PARTITIONS``, else the context's
+    ``defaultParallelism``."""
+    return (
+        shuffle_partitions
+        or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS") or 0)
+        or spark.sparkContext.defaultParallelism
+    )
 
 
 def get_spark(
@@ -25,19 +50,14 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     Every conf here scales: AQE re-plans shuffles at runtime so the static
-    ``shuffle.partitions`` is only an upper bound; broadcast threshold is
-    left at default (10 MB) because dimension tables (region/nation/
-    supplier, state polygons) stay well under it at any scale factor.
+    ``shuffle.partitions`` (see ``shuffle_partitions_for``) is only an
+    upper bound; broadcast threshold is left at default (10 MB) because
+    dimension tables (region/nation/supplier, state polygons) stay well
+    under it at any scale factor.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .master(master or default_master())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -55,6 +75,10 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
     )
     spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions_for(spark, shuffle_partitions)),
+    )
     # r16: the materialize.py 'checkpoint' strategy (reliable DFS
     # checkpoints for fact-width proxies at deployment) needs a
     # checkpoint dir; opt-in via env so local runs pay nothing.

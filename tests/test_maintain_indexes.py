@@ -418,3 +418,20 @@ def test_decision_log_compacts_past_fragment_cap(spark, tmp_path):
     # order + content survive compaction
     versions = [r["version"] for r in got.collect()]
     assert versions == sorted(versions) and set(versions) == set(range(n))
+
+
+def test_cli_session_keeps_its_local_star_master(monkeypatch, tmp_path):
+    """The CLI builds its session through ``get_spark`` on every core
+    (``local[*]``), not on the ``SPARK_GRAFT_CPUS`` default master."""
+    import opentimes_spark.jobs.maintain_indexes as MI
+
+    seen = {}
+
+    def fake_get_spark(*args, **kwargs):
+        seen.update(args=args, kwargs=kwargs)
+        raise RuntimeError("stop before any read")
+
+    monkeypatch.setattr(MI, "get_spark", fake_get_spark)
+    with pytest.raises(RuntimeError, match="stop before any read"):
+        MI.main(["--work", str(tmp_path)])
+    assert seen == {"args": ("maintain_indexes",), "kwargs": {"master": "local[*]"}}

@@ -19,6 +19,16 @@ from opentimes_spark.plans.pipeline import (
 )
 
 
+@pytest.fixture
+def persisted():
+    """A ``compute_times(persisted=...)`` list, unpersisted at teardown
+    so no routed matrix stays cached in the shared session."""
+    cached = []
+    yield cached
+    for df in cached:
+        df.unpersist()
+
+
 @pytest.fixture(scope="module")
 def world(spark):
     """Two states ('17', '18'), 2 counties × 2 tracts × 4 blocks each,
@@ -73,7 +83,7 @@ def test_blockloc_state_in_join_key(spark, world):
         build_blockloc(blocks_df, pop_df.union(pop_df.limit(1)))
 
 
-def test_full_pipeline(spark, world, tmp_path):
+def test_full_pipeline(spark, world, tmp_path, persisted):
     blocks_df, pop_df = world
     n_blocks = blocks_df.count()
 
@@ -109,7 +119,8 @@ def test_full_pipeline(spark, world, tmp_path):
     # times: 4 origins × destinations, fault-free haversine router
     dest = far
     times, missing, metadata = compute_times(
-        cenloc["17"], dest, HaversineRouter, centroid_type="weighted"
+        cenloc["17"], dest, HaversineRouter, centroid_type="weighted",
+        persisted=persisted,
     )
     n_pairs = 4 * dest.count()
     assert times.count() == n_pairs and missing.count() == 0
@@ -234,7 +245,7 @@ def test_expect_observed_rides_the_action(spark, world, tmp_path):
         check()
 
 
-def test_write_path_adds_only_the_range_exchange(spark, world):
+def test_write_path_adds_only_the_range_exchange(spark, world, persisted):
     """The T4 public-write path must not introduce any exchange beyond
     its ONE range partitioning on (origin_id, destination_id): the
     matrix output flows straight into the sorted layout — no hash
@@ -248,7 +259,9 @@ def test_write_path_adds_only_the_range_exchange(spark, world):
     cenloc = build_cenloc(blockloc, "tract")
     state_rows = cenloc.filter(F.col("geoid").startswith("17"))
     dest = build_destpoint(cenloc, (-87.7, 41.2), buffer_m=250_000)
-    times, _missing, _metadata = compute_times(state_rows, dest, HaversineRouter)
+    times, _missing, _metadata = compute_times(
+        state_rows, dest, HaversineRouter, persisted=persisted
+    )
     tagged = (
         times.withColumn("version", F.lit("0.0.1"))
         .withColumn("mode", F.lit("car"))
@@ -279,7 +292,7 @@ def test_write_path_adds_only_the_range_exchange(spark, world):
     )
 
 
-def test_destination_lookup_reverse_path(spark, world, tmp_path):
+def test_destination_lookup_reverse_path(spark, world, tmp_path, persisted):
     """The reverse consume path returns exactly the destination's row
     set, partition-pruned on the Hive keys with the destination
     equality pushed to the parquet reader (where the bloom filter
@@ -291,7 +304,9 @@ def test_destination_lookup_reverse_path(spark, world, tmp_path):
     cenloc = build_cenloc(blockloc, "tract")
     state_rows = cenloc.filter(F.col("geoid").startswith("17"))
     dest = build_destpoint(cenloc, (-87.7, 41.2), buffer_m=250_000)
-    times, _m, _md = compute_times(state_rows, dest, HaversineRouter)
+    times, _m, _md = compute_times(
+        state_rows, dest, HaversineRouter, persisted=persisted
+    )
     out = str(tmp_path / "public_rev")
     write_public(times, out, state="17")
 
