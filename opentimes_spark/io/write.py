@@ -114,27 +114,15 @@ def rename_deterministic(path: str, key_column: str, width: int = 11) -> dict[st
     import os
     import re
 
-    import pyarrow.parquet as pq
-
     renames: dict[str, str] = {}
     for f in sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)):
         base = os.path.basename(f)
         if not base.startswith("part-"):
             continue
-        meta = pq.ParquetFile(f).metadata
-        names = meta.schema.names
-        if key_column not in names:
+        ranges = [r for r in footer_ranges(f, key_column)[1] or [] if r is not None]
+        if not ranges:
             continue
-        idx = names.index(key_column)
-        mins, maxs = [], []
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx).statistics
-            if st is not None:
-                mins.append(st.min)
-                maxs.append(st.max)
-        if not mins:
-            continue
-        lo, hi = min(mins), max(maxs)
+        lo, hi = min(r[0] for r in ranges), max(r[1] for r in ranges)
         if isinstance(lo, bytes):
             lo, hi = lo.decode(), hi.decode()
         if not isinstance(lo, str):
@@ -156,6 +144,26 @@ def rename_deterministic(path: str, key_column: str, width: int = 11) -> dict[st
     return renames
 
 
+def footer_ranges(path: str, column: str):
+    """``(footer, ranges)`` of one parquet file: its parsed footer and
+    the (min, max) of ``column`` in each row group, None where a row
+    group has no statistics.  ``ranges`` is None when the file has no
+    such column.  The one footer walk behind the layout checks, the
+    deterministic rename and the point-lookup index."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    names = meta.schema.names
+    if column not in names:
+        return meta, None
+    idx = names.index(column)
+    ranges = []
+    for rg in range(meta.num_row_groups):
+        st = meta.row_group(rg).column(idx).statistics
+        ranges.append((st.min, st.max) if st is not None and st.has_min_max else None)
+    return meta, ranges
+
+
 def row_group_stats(path: str, column: str) -> list[tuple[str, object, object]]:
     """Per-row-group (file, min, max) for ``column`` — layout property
     check: after a sorted write, ranges on the sort key must be tight and
@@ -165,26 +173,17 @@ def row_group_stats(path: str, column: str) -> list[tuple[str, object, object]]:
     import glob
     import os
 
-    import pyarrow.parquet as pq
-
-    stats: list[tuple[str, object, object]] = []
     files = (
         sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
         if os.path.isdir(path)
         else [path]
     )
-    for f in files:
-        meta = pq.ParquetFile(f).metadata
-        schema_names = meta.schema.names
-        if column not in schema_names:
-            continue
-        idx = schema_names.index(column)
-        for rg in range(meta.num_row_groups):
-            col = meta.row_group(rg).column(idx)
-            st = col.statistics
-            if st is not None:
-                stats.append((f, st.min, st.max))
-    return stats
+    return [
+        (f, *r)
+        for f in files
+        for r in footer_ranges(f, column)[1] or []
+        if r is not None
+    ]
 
 
 def write_orc(

@@ -18,24 +18,40 @@ Stage parity map:
   + metadata)
 - write_public    ⇝ create_public_files.py (partitioned, range-sorted,
   size-capped layout)
-- point_lookup    ⇝ the browser/DuckDB consume path (README.md:88-98,
-  site/assets/js/map.js §3.3)
+- point_lookup    ⇝ the browser consume path (README.md:88-98,
+  site/assets/js/map.js:593-614, 702-724; SURVEY.md §3.3): each leaf
+  file's footer parsed once and cached, row groups kept by their
+  origin_id min/max, read with pyarrow, no Spark job
 """
 
 from __future__ import annotations
 
+import os
+import re
 import uuid
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from opentimes_spark.functions.geoid import split_geoid
-from opentimes_spark.io.write import write_sorted_partitioned
+from opentimes_spark.io.write import footer_ranges, write_sorted_partitioned
 from opentimes_spark.operators.matrix import split_times_missing, travel_time_matrix
 from opentimes_spark.operators.spatial import project_points
 from opentimes_spark.operators.weighted_mean import weighted_centroids
 
 PARTITION_KEYS = ["version", "mode", "year", "geography", "state", "centroid_type"]
+LOOKUP_SCHEMA = StructType(
+    [
+        StructField("origin_id", StringType()),
+        StructField("destination_id", StringType()),
+        StructField("duration_sec", DoubleType()),
+    ]
+)
 
 
 def build_blockloc(
@@ -437,9 +453,11 @@ def write_public(
         .withColumn("state", F.lit(state))
         .withColumn("centroid_type", F.lit(centroid_type))
     )
-    # zone maps cover origin_id (the sort key); the bloom filter covers
-    # destination-keyed point lookups, whose values span every row
-    # group's min/max range in an origin-sorted file
+    # zone maps cover origin_id (the sort key).  The destination_id
+    # bloom filter serves only external Spark and DuckDB readers: this
+    # package's own destination_lookup reads every row group of the
+    # leaf, and in a full OD matrix every row group holds every
+    # destination, so the filter would drop none of them
     write_sorted_partitioned(
         tagged,
         out_dir,
@@ -449,6 +467,106 @@ def write_public(
         observation=observation,
         bloom_filter_cols=["destination_id"],
     )
+
+
+# Characters Spark escapes in a partition directory name
+# (ExternalCatalogUtils.charToEscape).  A value holding one is not
+# written as ``key=value``, so its leaf cannot be resolved from the keys.
+_ESCAPED = re.compile(r'[\x00-\x1f"#%\'*/:=?\\\x7f{\[\]^]')
+
+# leaf directory -> (its data-file listing, [(file, footer, origin_id
+# (min, max) per row group)]).  One entry per leaf looked up, a few KB
+# of footers each; an entry whose leaf is gone is dropped.
+_FOOTERS: dict[str, tuple[list, list]] = {}
+
+
+def _leaf(public_dir: str, keys: dict[str, str]) -> str:
+    """The Hive leaf directory of one published partition, resolved
+    from its six keys without listing the root."""
+    url = urlparse(public_dir)
+    if url.scheme not in ("", "file"):
+        raise ValueError(
+            f"point lookups read a local path, not {public_dir!r}; read a "
+            f"{url.scheme}:// root with spark.read.parquet"
+        )
+    root = url.path if url.scheme else public_dir
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"no published times at {public_dir!r}")
+    for k, v in keys.items():
+        if _ESCAPED.search(str(v)):
+            raise ValueError(
+                f"partition value {k}={v!r} holds a character Spark escapes "
+                "in partition paths"
+            )
+    return os.path.join(root, *(f"{k}={keys[k]}" for k in PARTITION_KEYS))
+
+
+def _footers(leaf: str) -> list[tuple[str, object, list | None]]:
+    """``(file, footer, origin_id ranges)`` of each data file in ``leaf``
+    (``io.write.footer_ranges``), cached per leaf.  The entry is kept
+    only while the leaf lists the same ``(name, size, mtime_ns)`` for
+    its files, so a republish is read afresh and never served stale."""
+    try:
+        entries = os.scandir(leaf)
+    except FileNotFoundError:
+        _FOOTERS.pop(leaf, None)
+        return []
+    with entries:
+        listing = sorted(
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+            for e in entries
+            if e.name.endswith(".parquet") and not e.name.startswith(("_", "."))
+        )
+    cached = _FOOTERS.get(leaf)
+    if cached is None or cached[0] != listing:
+        files = []
+        for name, _, _ in listing:
+            path = os.path.join(leaf, name)
+            files.append((path, *footer_ranges(path, "origin_id")))
+        cached = _FOOTERS[leaf] = (listing, files)
+    return cached[1]
+
+
+def lookup_row_groups(
+    public_dir: str, column: str, key: str, keys: dict[str, str]
+) -> list[tuple[str, object, list[int]]]:
+    """``(file, footer, row-group indices)`` that a lookup of ``column`` =
+    ``key`` in the partition ``keys`` reads.  An origin keeps the row
+    groups whose origin_id min/max covers it (a row group without
+    statistics is kept); a destination, whose values span every row
+    group of an origin-sorted file, keeps all of them."""
+    picked = []
+    for path, meta, ranges in _footers(_leaf(public_dir, keys)):
+        if column == "origin_id":
+            rgs = [
+                i
+                for i, r in enumerate(ranges or [])
+                if r is None or r[0] <= key <= r[1]
+            ]
+        else:
+            rgs = list(range(meta.num_row_groups))
+        if rgs:
+            picked.append((path, meta, rgs))
+    return picked
+
+
+def _lookup(
+    spark, public_dir: str, column: str, key: str, keys: dict[str, str]
+) -> DataFrame:
+    """The rows of one partition whose ``column`` equals ``key``, read
+    with pyarrow from the row groups ``lookup_row_groups`` picks and
+    handed to Spark as a local relation: collecting it runs no job."""
+    tables = []
+    for path, meta, rgs in lookup_row_groups(public_dir, column, key, keys):
+        with pq.ParquetFile(path, metadata=meta) as pf:
+            tables.append(pf.read_row_groups(rgs, columns=LOOKUP_SCHEMA.names))
+    if not tables:
+        return spark.createDataFrame([], LOOKUP_SCHEMA)
+    table = pa.concat_tables(tables).filter(pc.field(column) == key)
+    # createDataFrame(pa.Table) drops every record batch after an empty
+    # one (PySpark 4.1.2), and the filter leaves an empty batch for each
+    # kept row group without the key: hand it one batch
+    return spark.createDataFrame(table.combine_chunks(), schema=LOOKUP_SCHEMA)
 
 
 def point_lookup(
@@ -462,20 +580,12 @@ def point_lookup(
     state: str = "17",
     centroid_type: str = "weighted",
 ) -> DataFrame:
-    """The consume path (§3.3): all partition keys + origin →
-    partition-pruned, row-group-skipping scan of 3 columns."""
-    df = spark.read.parquet(public_dir)
-    return (
-        df.filter(
-            (F.col("version") == version)
-            & (F.col("mode") == mode)
-            & (F.col("year") == year)
-            & (F.col("geography") == geography)
-            & (F.col("state") == state)
-            & (F.col("centroid_type") == centroid_type)
-            & (F.col("origin_id") == origin_id)
-        )
-        .select("origin_id", "destination_id", "duration_sec")
+    """The consume path (§3.3): all partition keys + origin → the
+    origin's rows from the row groups whose origin_id min/max covers it
+    (``lookup_row_groups``), 3 columns, ``LOOKUP_SCHEMA``."""
+    keys = (version, mode, year, geography, state, centroid_type)
+    return _lookup(
+        spark, public_dir, "origin_id", origin_id, dict(zip(PARTITION_KEYS, keys))
     )
 
 
@@ -492,22 +602,15 @@ def destination_lookup(
 ) -> DataFrame:
     """The REVERSE consume path: all times INTO a destination.  The
     file layout is origin-sorted, so destination values span every row
-    group's min/max and zone maps cannot skip — this is exactly what
-    the destination_id parquet BLOOM FILTER (write_public) exists for:
-    the pushed equality reaches the reader, and a definite bloom miss
-    drops a row group without touching its data pages.  (The Z-order
-    layout in functions/zorder.py is the alternative when BOTH axes
-    need zone-map pruning.)"""
-    df = spark.read.parquet(public_dir)
-    return (
-        df.filter(
-            (F.col("version") == version)
-            & (F.col("mode") == mode)
-            & (F.col("year") == year)
-            & (F.col("geography") == geography)
-            & (F.col("state") == state)
-            & (F.col("centroid_type") == centroid_type)
-            & (F.col("destination_id") == destination_id)
-        )
-        .select("origin_id", "destination_id", "duration_sec")
+    group's min/max and no row group can be skipped: the lookup reads
+    every row group of the partition's leaf and filters on the key.
+    (The Z-order layout in functions/zorder.py is the alternative when
+    BOTH axes need zone-map pruning.)"""
+    keys = (version, mode, year, geography, state, centroid_type)
+    return _lookup(
+        spark,
+        public_dir,
+        "destination_id",
+        destination_id,
+        dict(zip(PARTITION_KEYS, keys)),
     )

@@ -1,0 +1,159 @@
+"""Point and destination lookups read the published leaf with pyarrow
+from cached footers (plans/pipeline.py ``_lookup``).  The Spark scan of
+the published root that lookups used to run is kept here as the oracle:
+every lookup must return its rows and its schema."""
+
+from __future__ import annotations
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from opentimes_spark.io.write import row_group_stats
+from opentimes_spark.plans.pipeline import (
+    LOOKUP_SCHEMA,
+    PARTITION_KEYS,
+    destination_lookup,
+    lookup_row_groups,
+    point_lookup,
+    write_public,
+)
+
+KEYS = dict(
+    version="0.0.1", mode="car", year="2024", geography="tract",
+    state="17", centroid_type="weighted",
+)
+ORIGINS = [f"17031{i:06d}" for i in range(12)]
+DESTS = [f"18097{j:06d}" for j in range(7)]
+# not a full matrix: the last destination is reached from the last three
+# origins only, so the row groups before theirs hold none of its rows
+PAIRS = [
+    (o, d, float(60 * i + j))
+    for i, o in enumerate(ORIGINS)
+    for j, d in enumerate(DESTS)
+    if j < len(DESTS) - 1 or i >= len(ORIGINS) - 3
+]
+RARE_DEST = DESTS[-1]
+
+
+def oracle(spark, root, column, key, keys=KEYS):
+    """The Spark scan the lookups replaced: list the root, prune the
+    Hive keys, push the key equality to the parquet reader."""
+    cond = F.col(column) == key
+    for k in PARTITION_KEYS:
+        cond &= F.col(k) == keys[k]
+    return (
+        spark.read.parquet(root)
+        .filter(cond)
+        .select("origin_id", "destination_id", "duration_sec")
+    )
+
+
+def sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def published(spark, tmp_path_factory):
+    """Several one-row-group files: ``max_records_per_file`` does not
+    divide an origin's 6 or 7 rows, so some origins span two row groups."""
+    root = str(tmp_path_factory.mktemp("lookup") / "times")
+    times = spark.createDataFrame(
+        PAIRS, "origin_id string, destination_id string, duration_sec double"
+    )
+    write_public(times, root, max_records_per_file=16)
+    return root
+
+
+def row_groups_holding(root, origin):
+    """Row groups whose data pages hold ``origin``, read from the data."""
+    held = 0
+    for path in {f for f, _, _ in row_group_stats(root, "origin_id")}:
+        pf = pq.ParquetFile(path)
+        for rg in range(pf.num_row_groups):
+            ids = pf.read_row_group(rg, columns=["origin_id"])["origin_id"]
+            held += pc.any(pc.equal(ids, origin)).as_py()
+    return held
+
+
+def test_lookups_equal_the_spark_scan(spark, published):
+    """Every origin and destination (and an absent key of each kind)
+    returns the oracle's rows, with the oracle's schema."""
+    assert len(row_group_stats(published, "origin_id")) > 4
+    for column, fn, keys in (
+        ("origin_id", point_lookup, ORIGINS + ["17031999999"]),
+        ("destination_id", destination_lookup, DESTS + ["18097999999"]),
+    ):
+        for key in keys:
+            got = fn(spark, published, key)
+            want = oracle(spark, published, column, key)
+            assert got.schema == want.schema == LOOKUP_SCHEMA
+            assert sorted_rows(got) == sorted_rows(want), (column, key)
+
+
+def test_origin_lookup_reads_only_its_row_groups(published):
+    """Min/max pruning keeps exactly the row groups that hold the
+    origin: 1 of N for an interior origin, 2 for one that straddles a
+    row-group boundary."""
+    n_rg = len(row_group_stats(published, "origin_id"))
+    read = {
+        o: sum(len(g) for _, _, g in lookup_row_groups(published, "origin_id", o, KEYS))
+        for o in ORIGINS
+    }
+    assert read == {o: row_groups_holding(published, o) for o in ORIGINS}
+    assert 1 in read.values() and 2 in read.values()
+    assert max(read.values()) < n_rg
+
+
+def test_lookup_keeps_rows_after_an_empty_row_group(spark, published):
+    """PySpark's createDataFrame(pa.Table) drops every record batch that
+    follows an empty one.  The rare destination's rows sit in the last
+    row groups, after row groups whose filtered batch is empty; every
+    one of them must come back."""
+    path, _, rgs = lookup_row_groups(published, "destination_id", RARE_DEST, KEYS)[0]
+    head = pq.ParquetFile(path).read_row_group(rgs[0], columns=["destination_id"])
+    assert not pc.any(pc.equal(head["destination_id"], RARE_DEST)).as_py()
+    got = sorted_rows(destination_lookup(spark, published, RARE_DEST))
+    want = sorted((o, d, t) for o, d, t in PAIRS if d == RARE_DEST)
+    assert got == want and len(got) == 3
+
+
+def test_republish_is_read_afresh(spark, tmp_path):
+    """A republish into the same root replaces the cached footers: the
+    next lookup returns the new durations, not a stale or missing file."""
+    root = str(tmp_path / "times")
+    schema = "origin_id string, destination_id string, duration_sec double"
+    write_public(spark.createDataFrame(PAIRS, schema), root)
+    before = sorted_rows(point_lookup(spark, root, ORIGINS[0]))
+    assert [t for _, _, t in before] == [float(j) for j in range(6)]
+    doubled = [(o, d, 2 * t + 1) for o, d, t in PAIRS]
+    write_public(spark.createDataFrame(doubled, schema), root)
+    after = sorted_rows(point_lookup(spark, root, ORIGINS[0]))
+    assert [t for _, _, t in after] == [2.0 * j + 1 for j in range(6)]
+    assert sorted_rows(destination_lookup(spark, root, DESTS[0])) == sorted(
+        (o, d, t) for o, d, t in doubled if d == DESTS[0]
+    )
+
+
+def test_absent_partition_gives_an_empty_frame(spark, published):
+    for fn, key in ((point_lookup, ORIGINS[0]), (destination_lookup, DESTS[0])):
+        got = fn(spark, published, key, state="99")
+        assert got.schema == LOOKUP_SCHEMA and got.collect() == []
+
+
+def test_missing_root_is_refused_by_name(spark, tmp_path):
+    missing = str(tmp_path / "never_published")
+    with pytest.raises(FileNotFoundError, match="never_published"):
+        point_lookup(spark, missing, ORIGINS[0])
+
+
+def test_remote_root_points_to_spark(spark):
+    with pytest.raises(ValueError, match=r"spark\.read\.parquet"):
+        destination_lookup(spark, "s3a://bucket/times", DESTS[0])
+
+
+@pytest.mark.parametrize("value", ["17/18", "a=b", "17%2F", "c:d"])
+def test_escaped_partition_value_is_refused(spark, published, value):
+    with pytest.raises(ValueError, match="escapes"):
+        point_lookup(spark, published, ORIGINS[0], state=value)

@@ -293,11 +293,16 @@ def test_write_path_adds_only_the_range_exchange(spark, world, persisted):
 
 
 def test_destination_lookup_reverse_path(spark, world, tmp_path, persisted):
-    """The reverse consume path returns exactly the destination's row
-    set, partition-pruned on the Hive keys with the destination
-    equality pushed to the parquet reader (where the bloom filter
-    written by write_public applies)."""
-    from opentimes_spark.plans.pipeline import destination_lookup
+    """The reverse consume path returns exactly the destination's rows,
+    read from every row group of the partition's leaf: an origin-sorted
+    layout gives zone maps nothing to skip on destination_id."""
+    from opentimes_spark.io.write import row_group_stats
+    from opentimes_spark.plans.pipeline import (
+        LOOKUP_SCHEMA,
+        PARTITION_KEYS,
+        destination_lookup,
+        lookup_row_groups,
+    )
 
     blocks_df, pop_df = world
     blockloc = build_blockloc(blocks_df, pop_df, check=False)
@@ -316,9 +321,11 @@ def test_destination_lookup_reverse_path(spark, world, tmp_path, persisted):
     )
     got = destination_lookup(spark, out, some_dest)
     expect = times.filter(F.col("destination_id") == some_dest)
-    assert got.count() == expect.count() > 0
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
+    want = sorted(tuple(r) for r in expect.collect())
+    assert got.schema == LOOKUP_SCHEMA
+    assert sorted(tuple(r) for r in got.collect()) == want and want
+    keys = dict(
+        zip(PARTITION_KEYS, ("0.0.1", "car", "2024", "tract", "17", "weighted"))
     )
-    assert "PartitionFilters" in plan
-    assert "destination_id" in plan.split("PushedFilters")[1].split("\n")[0]
+    read = lookup_row_groups(out, "destination_id", some_dest, keys)
+    assert sum(len(g) for _, _, g in read) == len(row_group_stats(out, "origin_id"))

@@ -93,27 +93,35 @@ def test_ivf_probe_prunes_corpus_join(spark):
 
 
 def test_point_lookup_prunes_partitions(spark, tmp_path):
-    """§3.3 consume path: with all partition keys bound, the scan must
-    show PartitionFilters on the Hive keys and push the origin_id
-    predicate into the parquet reader — at 100 TB this is what makes the
-    lookup touch one directory and ~one row group."""
-    from opentimes_spark.plans.pipeline import point_lookup, write_public
+    """§3.3 consume path: with all partition keys bound, the lookup
+    opens only its own leaf directory.  A sibling partition (another
+    state=) holding a file that is not parquet must not break it, and
+    only the 3 lookup columns come back."""
+    from opentimes_spark.plans.pipeline import (
+        LOOKUP_SCHEMA,
+        PARTITION_KEYS,
+        point_lookup,
+        write_public,
+    )
 
+    rows = [(f"17031{i:06d}", f"18097{j:06d}", float(60 * (i + j)))
+            for i in range(4) for j in range(5)]
     times = spark.createDataFrame(
-        [(f"17031{i:06d}", f"18097{j:06d}", float(60 * (i + j)))
-         for i in range(4) for j in range(5)],
-        "origin_id string, destination_id string, duration_sec double",
+        rows, "origin_id string, destination_id string, duration_sec double"
     )
     out = str(tmp_path / "times_pub")
     write_public(times, out)
-    p = plan(point_lookup(spark, out, "17031000001"))
-    assert "PartitionFilters" in p
-    for key in ("version", "mode", "state", "centroid_type"):
-        assert key in p
-    assert "PushedFilters" in p and "origin_id" in p
-    # only the 3 projected columns reach the read schema
-    read_schema = [ln for ln in p.splitlines() if "ReadSchema" in ln][0]
-    assert "duration_sec" in read_schema
+    keys = dict(version="0.0.1", mode="car", year="2024", geography="tract",
+                state="18", centroid_type="weighted")
+    sibling = os.path.join(out, *(f"{k}={keys[k]}" for k in PARTITION_KEYS))
+    os.makedirs(sibling)
+    with open(os.path.join(sibling, "part-00000-junk.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    got = point_lookup(spark, out, "17031000001")
+    assert got.schema == LOOKUP_SCHEMA
+    assert sorted(tuple(r) for r in got.collect()) == [
+        r for r in rows if r[0] == "17031000001"
+    ]
 
 
 def test_lsh_band_join_runtime_reused_exchange(spark):
