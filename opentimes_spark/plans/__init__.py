@@ -1,3 +1,3 @@
-from opentimes_spark.plans.queries import QUERIES, ORACLE_SQL
-
-__all__ = ["QUERIES", "ORACLE_SQL"]
+"""Plan builders.  Import the module you need: ``plans.queries`` holds
+the query registry (``QUERIES``, ``ORACLE_SQL``) and ``plans.pipeline``
+the opentimes ETL stages; importing the package loads neither."""

@@ -21,7 +21,8 @@ Stage parity map:
 - point_lookup    ⇝ the browser consume path (README.md:88-98,
   site/assets/js/map.js:593-614, 702-724; SURVEY.md §3.3): each leaf
   file's footer parsed once and cached, row groups kept by their
-  origin_id min/max, read with pyarrow, no Spark job
+  origin_id min/max, read with pyarrow, the key matched on the ids'
+  dictionary codes, no Spark job
 """
 
 from __future__ import annotations
@@ -50,6 +51,14 @@ LOOKUP_SCHEMA = StructType(
         StructField("origin_id", StringType()),
         StructField("destination_id", StringType()),
         StructField("duration_sec", DoubleType()),
+    ]
+)
+_IDS = ["origin_id", "destination_id"]
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("origin_id", pa.string()),
+        ("destination_id", pa.string()),
+        ("duration_sec", pa.float64()),
     ]
 )
 
@@ -453,11 +462,12 @@ def write_public(
         .withColumn("state", F.lit(state))
         .withColumn("centroid_type", F.lit(centroid_type))
     )
-    # zone maps cover origin_id (the sort key).  The destination_id
-    # bloom filter serves only external Spark and DuckDB readers: this
-    # package's own destination_lookup reads every row group of the
-    # leaf, and in a full OD matrix every row group holds every
-    # destination, so the filter would drop none of them
+    # zone maps cover origin_id (the sort key).  No destination_id
+    # bloom filter: parquet-mr writes none for a column chunk that stays
+    # dictionary-encoded throughout, as destination_id's does while a
+    # state's destinations fit one dictionary page, and in a full OD
+    # matrix every row group holds every destination, so it could drop
+    # none of them
     write_sorted_partitioned(
         tagged,
         out_dir,
@@ -465,7 +475,6 @@ def write_public(
         order_by=["origin_id", "destination_id"],
         max_records_per_file=max_records_per_file,
         observation=observation,
-        bloom_filter_cols=["destination_id"],
     )
 
 
@@ -554,15 +563,25 @@ def _lookup(
     spark, public_dir: str, column: str, key: str, keys: dict[str, str]
 ) -> DataFrame:
     """The rows of one partition whose ``column`` equals ``key``, read
-    with pyarrow from the row groups ``lookup_row_groups`` picks and
-    handed to Spark as a local relation: collecting it runs no job."""
+    with pyarrow from the row groups ``lookup_row_groups`` picks, matched
+    on the ids' Parquet dictionary codes and handed to Spark as a local
+    relation: collecting it runs no job."""
     tables = []
     for path, meta, rgs in lookup_row_groups(public_dir, column, key, keys):
-        with pq.ParquetFile(path, metadata=meta) as pf:
+        # the ids come back dictionary-encoded whatever their pages'
+        # encoding (pyarrow encodes plain and fallback pages on read)
+        with pq.ParquetFile(path, metadata=meta, read_dictionary=_IDS) as pf:
             tables.append(pf.read_row_groups(rgs, columns=LOOKUP_SCHEMA.names))
     if not tables:
         return spark.createDataFrame([], LOOKUP_SCHEMA)
-    table = pa.concat_tables(tables).filter(pc.field(column) == key)
+    table = pa.concat_tables(tables)
+    # match the key against each chunk's own dictionary and keep the
+    # rows carrying a matching code: only the kept rows' ids are decoded
+    keep = [
+        pc.is_in(ids.indices, pc.indices_nonzero(pc.equal(ids.dictionary, key)))
+        for ids in table[column].chunks
+    ]
+    table = table.filter(pa.chunked_array(keep, pa.bool_())).cast(_ARROW_SCHEMA)
     # createDataFrame(pa.Table) drops every record batch after an empty
     # one (PySpark 4.1.2), and the filter leaves an empty batch for each
     # kept row group without the key: hand it one batch
@@ -602,10 +621,13 @@ def destination_lookup(
 ) -> DataFrame:
     """The REVERSE consume path: all times INTO a destination.  The
     file layout is origin-sorted, so destination values span every row
-    group's min/max and no row group can be skipped: the lookup reads
-    every row group of the partition's leaf and filters on the key.
-    (The Z-order layout in functions/zorder.py is the alternative when
-    BOTH axes need zone-map pruning.)"""
+    group's min/max and no row group can be skipped (the public files
+    carry no bloom filter either): the lookup reads every row group of
+    the partition's leaf, dictionary-encoded, matches the key against
+    each chunk's dictionary and keeps only the rows carrying its code,
+    so just those rows' ids are decoded to strings.  (The Z-order layout
+    in functions/zorder.py is the alternative when BOTH axes need
+    zone-map pruning.)"""
     keys = (version, mode, year, geography, state, centroid_type)
     return _lookup(
         spark,

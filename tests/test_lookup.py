@@ -1,10 +1,14 @@
 """Point and destination lookups read the published leaf with pyarrow
-from cached footers (plans/pipeline.py ``_lookup``).  The Spark scan of
-the published root that lookups used to run is kept here as the oracle:
-every lookup must return its rows and its schema."""
+from cached footers (plans/pipeline.py ``_lookup``) and match the key on
+the ids' dictionary codes.  The Spark scan of the published root that
+lookups used to run is kept here as the oracle: every lookup must return
+its rows and its schema."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -77,19 +81,111 @@ def row_groups_holding(root, origin):
     return held
 
 
-def test_lookups_equal_the_spark_scan(spark, published):
+def assert_lookups_equal_the_oracle(spark, root, origins, dests):
     """Every origin and destination (and an absent key of each kind)
     returns the oracle's rows, with the oracle's schema."""
-    assert len(row_group_stats(published, "origin_id")) > 4
     for column, fn, keys in (
-        ("origin_id", point_lookup, ORIGINS + ["17031999999"]),
-        ("destination_id", destination_lookup, DESTS + ["18097999999"]),
+        ("origin_id", point_lookup, origins + ["17031999999"]),
+        ("destination_id", destination_lookup, dests + ["18097999999"]),
     ):
         for key in keys:
-            got = fn(spark, published, key)
-            want = oracle(spark, published, column, key)
+            got = fn(spark, root, key)
+            want = oracle(spark, root, column, key)
             assert got.schema == want.schema == LOOKUP_SCHEMA
             assert sorted_rows(got) == sorted_rows(want), (column, key)
+
+
+def write_leaf(root, pairs, **write_table_args):
+    """One pyarrow-written data file in the leaf of ``KEYS``."""
+    leaf = os.path.join(root, *(f"{k}={KEYS[k]}" for k in PARTITION_KEYS))
+    os.makedirs(leaf)
+    o, d, t = zip(*pairs)
+    table = pa.table(
+        {"origin_id": list(o), "destination_id": list(d), "duration_sec": list(t)}
+    )
+    path = os.path.join(leaf, "part-00000.parquet")
+    pq.write_table(table, path, **write_table_args)
+    return path
+
+
+def id_chunks(path, rg):
+    """The column chunks of row group ``rg`` in the footer, by column."""
+    meta = pq.read_metadata(path).row_group(rg)
+    return {
+        meta.column(i).path_in_schema: meta.column(i)
+        for i in range(meta.num_columns)
+    }
+
+
+def test_lookups_equal_the_spark_scan(spark, published):
+    assert len(row_group_stats(published, "origin_id")) > 4
+    assert_lookups_equal_the_oracle(spark, published, ORIGINS, DESTS)
+
+
+def test_lookups_match_plain_encoded_ids(spark, tmp_path):
+    """A leaf whose ids carry no dictionary at all (written with
+    ``use_dictionary=False``): pyarrow dictionary-encodes them on read,
+    and every lookup still equals the oracle."""
+    root = str(tmp_path / "times")
+    path = write_leaf(root, PAIRS, use_dictionary=False, row_group_size=20)
+    chunks = id_chunks(path, 0)
+    assert not chunks["origin_id"].has_dictionary_page
+    assert not chunks["destination_id"].has_dictionary_page
+    assert_lookups_equal_the_oracle(spark, root, ORIGINS, DESTS)
+
+
+def test_lookups_match_ids_that_fall_back_to_plain_pages(spark, tmp_path):
+    """A Spark-written leaf whose destination_id dictionary outgrows a
+    tiny ``parquet.dictionary.page.size`` partway through the column
+    chunk: its first pages are dictionary-encoded, the rest plain."""
+    few = DESTS[:5]
+    pairs = [
+        (o, d, float(10 * i + j))
+        for i, o in enumerate(ORIGINS)
+        for j, d in enumerate(few)
+    ]
+    late = [f"17031{i:06d}" for i in range(100, 104)]
+    pairs += [
+        (o, f"18097{100 * (i + 1) + j:06d}", float(j))
+        for i, o in enumerate(late)
+        for j in range(100)
+    ]
+    root = str(tmp_path / "times")
+    times = spark.createDataFrame(
+        pairs, "origin_id string, destination_id string, duration_sec double"
+    )
+    spark.conf.set("parquet.dictionary.page.size", "1024")
+    spark.conf.set("parquet.page.row.count.limit", "50")
+    try:
+        write_public(times.coalesce(1), root)
+    finally:
+        spark.conf.unset("parquet.dictionary.page.size")
+        spark.conf.unset("parquet.page.row.count.limit")
+    [path] = {f for f, _, _ in row_group_stats(root, "origin_id")}
+    dest = id_chunks(path, 0)["destination_id"]
+    assert dest.has_dictionary_page
+    assert {"PLAIN_DICTIONARY", "PLAIN"} <= set(dest.encodings)
+    dests = few + [f"18097{100 * (i + 1) + j:06d}" for i in range(4) for j in (0, 99)]
+    assert_lookups_equal_the_oracle(spark, root, ORIGINS + late, dests)
+
+
+def test_key_in_one_row_groups_dictionary_only(spark, tmp_path):
+    """Each row group has its own dictionary: the first holds d0, d1, d2
+    and the second d1, d3, so d0 and d3 are each in one dictionary only
+    and d1 has a different code in each.  A code taken from one row
+    group and matched in another would return the wrong rows."""
+    d0, d1, d2, d3 = DESTS[:4]
+    o0, o1 = ORIGINS[:2]
+    pairs = [(o0, d0, 1.0), (o0, d1, 2.0), (o0, d2, 3.0), (o1, d1, 4.0), (o1, d3, 5.0)]
+    root = str(tmp_path / "times")
+    path = write_leaf(root, pairs, row_group_size=3)
+    pf = pq.ParquetFile(path, read_dictionary=["destination_id"])
+    dicts = [
+        pf.read_row_group(rg)["destination_id"].chunk(0).dictionary.to_pylist()
+        for rg in range(pf.num_row_groups)
+    ]
+    assert dicts == [[d0, d1, d2], [d1, d3]]
+    assert_lookups_equal_the_oracle(spark, root, [o0, o1], [d0, d1, d2, d3])
 
 
 def test_origin_lookup_reads_only_its_row_groups(published):
