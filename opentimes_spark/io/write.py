@@ -52,6 +52,7 @@ def write_sorted_partitioned(
     zstd_level: int | None = 12,
     bloom_filter_cols: list[str] | None = None,
     bloom_filter_ndv: int = 100_000,
+    dynamic_overwrite: bool = False,
 ) -> None:
     """Write ``df`` Hive-partitioned, range-sorted on ``order_by``.
 
@@ -77,6 +78,9 @@ def write_sorted_partitioned(
       the reader drops row groups on a definite bloom miss without
       touching data pages.  ``bloom_filter_ndv`` sizes the bitset
       (expected distinct values per row group).
+    - ``dynamic_overwrite``: replace only the partitions ``df`` holds
+      rows for (``partitionOverwriteMode=dynamic``) instead of every
+      partition under ``path``.
     """
     from pyspark.sql import functions as F
 
@@ -93,6 +97,8 @@ def write_sorted_partitioned(
         writer = writer.option(
             f"parquet.bloom.filter.expected.ndv#{col}", str(bloom_filter_ndv)
         )
+    if dynamic_overwrite:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

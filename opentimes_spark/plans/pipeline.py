@@ -453,7 +453,10 @@ def write_public(
 ) -> None:
     """Partitioned public write with the T4 sorted layout: Hive keys as
     STRINGS (reference hive_types_autocast=false) + range-sorted
-    (origin_id, destination_id) for tight row-group stats."""
+    (origin_id, destination_id) for tight row-group stats.  The overwrite
+    is dynamic: it replaces only the partition it writes, so publishing
+    one state (or mode, year, ...) keeps every other one under
+    ``out_dir``."""
     tagged = (
         times.withColumn("version", F.lit(version))
         .withColumn("mode", F.lit(mode))
@@ -475,6 +478,7 @@ def write_public(
         order_by=["origin_id", "destination_id"],
         max_records_per_file=max_records_per_file,
         observation=observation,
+        dynamic_overwrite=True,
     )
 
 

@@ -232,6 +232,22 @@ def test_republish_is_read_afresh(spark, tmp_path):
     )
 
 
+def test_publishing_a_state_keeps_the_other_states(spark, tmp_path):
+    """One root holds every state's times, as the reference's per-state
+    jobs publish them: publishing state 18 must not erase state 17."""
+    root = str(tmp_path / "times")
+    schema = "origin_id string, destination_id string, duration_sec double"
+    il = [(o, d, t) for o, d, t in PAIRS if o == ORIGINS[0]]
+    ind = [("18097" + o[5:], "17031" + d[5:], t + 0.5) for o, d, t in il]
+    write_public(spark.createDataFrame(il, schema), root, state="17")
+    write_public(spark.createDataFrame(ind, schema), root, state="18")
+    for state, pairs in (("17", il), ("18", ind)):
+        origin = pairs[0][0]
+        assert sorted_rows(point_lookup(spark, root, origin, state=state)) == pairs
+        keys = dict(KEYS, state=state)
+        assert sorted_rows(oracle(spark, root, "origin_id", origin, keys)) == pairs
+
+
 def test_absent_partition_gives_an_empty_frame(spark, published):
     for fn, key in ((point_lookup, ORIGINS[0]), (destination_lookup, DESTS[0])):
         got = fn(spark, published, key, state="99")

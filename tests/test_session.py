@@ -1,12 +1,16 @@
 """The shuffle-partition default ``get_spark`` derives from the running
-context, checked against the shared test session so no second session
-starts."""
+context, and the driver JVM's launch flags, checked against the shared
+test session so no second session starts."""
 
 from __future__ import annotations
 
 import pytest
 
-from opentimes_spark.session import default_master, shuffle_partitions_for
+from opentimes_spark.session import (
+    default_master,
+    initial_heap_mb,
+    shuffle_partitions_for,
+)
 
 
 @pytest.fixture(autouse=True)
@@ -41,3 +45,20 @@ def test_default_cpus_keep_a_32_slot_master(monkeypatch, cpus):
     else:
         monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
     assert default_master() == "local[32]"
+
+
+def test_driver_jvm_starts_with_metaspace_and_initial_heap(spark):
+    args = list(
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getRuntimeMXBean().getInputArguments()
+    )
+    assert "-XX:MetaspaceSize=256m" in args
+    assert any(a.startswith("-Xms") for a in args), args
+
+
+@pytest.mark.parametrize(
+    "driver_memory, mib", [("8g", 2048), ("1g", 1024), ("512", 512), ("2048m", 2048)]
+)
+def test_initial_heap_never_exceeds_the_driver_memory(driver_memory, mib):
+    """A bare number is MiB, as Spark reads ``spark.driver.memory``."""
+    assert initial_heap_mb(driver_memory) == mib
