@@ -22,8 +22,8 @@ own defaults, about 256 MB of heap and 21 MB of metaspace, made a cold
 produce process (about 160 MB of class metadata, 4 cores) run 64–102 GC
 pauses and 17–30 concurrent G1 mark cycles, started by the metadata
 threshold and by humongous allocations; with these flags it runs 8
-pauses and no concurrent cycle.  An initial heap equal to the driver memory saved no
-more CPU and slowed start-up.  The flags go through
+pauses and no concurrent cycle.  An initial heap equal to the driver
+memory saved no more CPU and slowed start-up.  The flags go through
 ``spark.driver.defaultJavaOptions``, which the launcher puts before
 ``spark.driver.extraJavaOptions`` and ``--driver-java-options``, so
 flags passed there still apply, and a user's own ``-Xms`` wins.  They
