@@ -11,10 +11,10 @@ format a stdlib+numpy decoder can honestly cover:
   PLTE + tRNS), single-frame GIF (full LZW
   with dictionary growth + 4-pass interlace), baseline JPEG (SOF0:
   Annex-K Huffman, orthonormal IDCT, 4:2:0/4:2:2/4:4:4 sampling, DRI
-  restart markers — round 7), and RIFF/WAVE audio across the full
-  format matrix (integer PCM 8/16/24/32-bit, IEEE float32/64, G.711
-  mu-law/A-law, IMA ADPCM, EXTENSIBLE wrappers — round 10) — each
-  with an encoder partner and byte-level round-trip tests.
+  restart markers — round 7) — each with an encoder partner and
+  byte-level round-trip tests.  Audio payloads and video containers
+  have no native codec; ``frame_sample_plan`` plans video frames from
+  metadata only.
 - ``decode_image`` with ``codec="fake"`` runs a deterministic synthetic
   decoder (dimensions + checksum derived from the bytes) for pipeline
   tests that don't care about pixels;
@@ -3150,105 +3150,6 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     )
 
 
-def encode_avi(frames: list[bytes], w: int = 16, h: int = 16) -> bytes:
-    """Minimal RIFF/AVI container around raw frame payloads ('00db'
-    uncompressed-DIB chunks) — the round-trip partner of
-    ``demux_avi_frames``; headers carry just enough (avih frame count
-    and dims) to be structurally honest."""
-    import struct
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return tag + struct.pack("<I", len(data)) + data + pad
-
-    def lst(kind: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", kind + data)
-
-    avih = struct.pack(
-        "<14I", 33333, 0, 0, 0, len(frames), 0, 1, 0, w, h, 0, 0, 0, 0
-    )
-    strh = struct.pack("<4s4sI", b"vids", b"RAW ", 0) + b"\x00" * 44
-    strf = struct.pack("<IiiHH", 40, w, h, 1, 24) + b"\x00" * 20
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00db", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def demux_avi_frames(b: bytes) -> list[tuple[int, int, int]]:
-    """[(frame_idx, payload_offset, size)] from an AVI container — the
-    'movi' LIST walked chunk by chunk ('##db'/'##dc'/'##wb' stream
-    data), WITHOUT decoding a single frame.  Offsets address the frame
-    bytes inside the original buffer, so a sampling plan can slice
-    just the chosen frames (`avi_frame_slices`) and ship only those to
-    a decoder — the demux-then-selective-decode pattern that makes
-    video sampling at 100 TB an index walk plus tiny reads, never a
-    full decode."""
-    import struct
-
-    if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        raise ValueError("not an AVI")
-    pos = 12
-    frames: list[tuple[int, int, int]] = []
-    while pos + 8 <= len(b):
-        tag = b[pos : pos + 4]
-        (size,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-        if tag == b"LIST":
-            kind = b[pos + 8 : pos + 12]
-            if kind == b"movi":
-                mpos = pos + 12
-                mend = pos + 8 + size
-                while mpos + 8 <= mend:
-                    ctag = b[mpos : mpos + 4]
-                    (csize,) = struct.unpack("<I", b[mpos + 4 : mpos + 8])
-                    if ctag[2:4] in (b"db", b"dc", b"wb"):
-                        frames.append((len(frames), mpos + 8, csize))
-                    mpos += 8 + csize + (csize % 2)
-                return frames
-            pos += 12  # descend into other LISTs
-            continue
-        pos += 8 + size + (size % 2)
-    raise ValueError("AVI has no movi list")
-
-
-def avi_frame_slices(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """REAL selective frame extraction: demux each video payload's AVI
-    index (Arrow-batched, no decode), keep every ``every_n``-th frame,
-    and slice ONLY those frames' bytes out of the payload —
-    (media_id, frame_idx, frame_bytes, n_bytes).  Downstream decoders
-    receive frame-sized rows; the full payload never leaves this
-    projection.  The metadata-only twin is ``frame_sample_plan``."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("frame_idx", IntegerType(), False),
-            StructField("frame_bytes", BinaryType(), False),
-            StructField("n_bytes", LongType(), False),
-        ]
-    )
-
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {
-                "media_id": [], "frame_idx": [], "frame_bytes": [], "n_bytes": []
-            }
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                blob = bytes(p)
-                for idx, off, size in demux_avi_frames(blob):
-                    if idx % every_n:
-                        continue
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(idx)
-                    out["frame_bytes"].append(blob[off : off + size])
-                    out["n_bytes"].append(size)
-            yield pd.DataFrame(out)
-
-    return df.filter(F.col("kind") == "video").mapInPandas(demux, schema)
-
-
 RESIZED_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -3258,7 +3159,6 @@ RESIZED_SCHEMA = StructType(
         StructField("n_bytes", LongType(), False),
     ]
 )
-
 
 
 def bilinear_resize(img: np.ndarray, target_h: int, target_w: int) -> np.ndarray:
@@ -3385,603 +3285,3 @@ def resize_images(
             )
 
     return df.filter(F.col("kind") == "image").mapInPandas(resize, RESIZED_SCHEMA)
-
-
-# --- audio: pure-numpy WAV (RIFF) codec + frame features -------------------
-# The native decoder covers the full RIFF/WAVE format matrix a web crawl
-# actually contains: integer PCM at 8/16/24/32 bits, IEEE float32/64,
-# G.711 mu-law and A-law (the telephony formats, exact 256-entry
-# expansion), IMA/DVI ADPCM (format 0x11, 4-bit, mono/stereo — decoded
-# vectorized ACROSS blocks: the per-sample recurrence loops over the
-# ~505 in-block positions while numpy carries every block's
-# predictor/index state in lockstep), and WAVE_FORMAT_EXTENSIBLE
-# wrappers of any of these.  Only perceptual codecs (MP3/Opus/AAC)
-# remain behind the external-library seam — they would plug in at the
-# same place Pillow does for images; PCM is the on-disk format training
-# pipelines standardize on anyway (decode once at ingest, store raw).
-
-
-def encode_wav(
-    samples: np.ndarray, sample_rate: int = 16000
-) -> bytes:
-    """int16 PCM samples (n,) mono or (n, ch) → RIFF/WAVE bytes."""
-    if samples.dtype != np.int16:
-        raise ValueError("encode_wav expects int16 samples")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    data = samples.astype("<i2").tobytes()
-    block_align = ch * 2
-    fmt = (
-        b"fmt "
-        + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little")  # PCM
-        + ch.to_bytes(2, "little")
-        + sample_rate.to_bytes(4, "little")
-        + (sample_rate * block_align).to_bytes(4, "little")
-        + block_align.to_bytes(2, "little")
-        + (16).to_bytes(2, "little")  # bits per sample
-    )
-    chunks = fmt + b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
-
-
-# G.711 (ITU-T): exact 256-entry expansion tables built from the
-# segment/mantissa formulas; encode_* are their standard compressors.
-_G711_BIAS = 0x84
-_G711_CLIP = 32635
-
-
-def _mulaw_decode_table() -> np.ndarray:
-    u = (~np.arange(256)).astype(np.uint8)
-    sign = (u & 0x80) != 0
-    exponent = (u.astype(np.int32) >> 4) & 0x07
-    mantissa = u.astype(np.int32) & 0x0F
-    mag = (((mantissa << 3) + _G711_BIAS) << exponent) - _G711_BIAS
-    return np.where(sign, -mag, mag).astype(np.int16)
-
-
-def _alaw_decode_table() -> np.ndarray:
-    u = (np.arange(256) ^ 0x55).astype(np.int32)
-    sign = (u & 0x80) != 0
-    exponent = (u >> 4) & 0x07
-    mantissa = u & 0x0F
-    mag = np.where(
-        exponent == 0,
-        (mantissa << 4) + 8,
-        ((mantissa << 4) + 0x108) << np.maximum(exponent - 1, 0),
-    )
-    # A-law sign bit SET means positive (ITU G.711 convention — the
-    # opposite of mu-law's)
-    return np.where(sign, mag, -mag).astype(np.int16)
-
-
-_MULAW_DECODE = _mulaw_decode_table()
-_ALAW_DECODE = _alaw_decode_table()
-
-
-def mulaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 → G.711 mu-law codes (uint8).
-
-    Exact vectorized port of the Sun ``st_14linear2ulaw`` idiom (the
-    audioop/CCITT reference): the sample is arithmetic-shifted into the
-    14-bit domain FIRST, then the magnitude of negatives is taken as
-    ``-(x >> 2)`` (not ``abs(x) >> 2`` — the two differ for negative
-    samples not divisible by 4), clipped at 8159, biased by 33
-    (``BIAS >> 2``), segmented on the 14-bit segment-end table, and the
-    code word complemented via the sign mask.  Bit-identical to
-    ``audioop.lin2ulaw`` over the full int16 range (swept in
-    ``tests/test_multimodal_audio.py``)."""
-    val = samples.astype(np.int32) >> 2  # arithmetic shift: 14-bit domain
-    mask = np.where(val < 0, 0x7F, 0xFF)
-    mag = np.where(val < 0, -val, val)
-    mag = np.minimum(mag, 8159) + 33  # CLIP then BIAS>>2, 14-bit domain
-    # seg = index of first segment end >= mag over
-    # {0x3F,0x7F,...,0x1FFF}; mag is in [33, 8192] so bit_length-6
-    # (via exact float log2 — mag <= 2**13) reproduces the table search.
-    seg = np.maximum(np.floor(np.log2(mag)).astype(np.int32) - 5, 0)
-    uval = (seg << 4) | ((mag >> (seg + 1)) & 0x0F)
-    out = np.where(seg >= 8, 0x7F, uval) ^ mask  # seg 8 = clipped max
-    return out.astype(np.uint8)
-
-
-def alaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 → G.711 A-law codes (uint8).
-
-    Exact vectorized port of the Sun ``st_linear2alaw`` idiom: shift
-    into the 13-bit domain first (arithmetic ``>> 3``), then negatives
-    become ``-val - 1`` (one's-complement magnitude — NOT ``abs``),
-    segment on {0x1F,0x3F,...,0xFFF}, with segments 0 and 1 sharing the
-    ``mag >> 1`` quantization.  Bit-identical to ``audioop.lin2alaw``
-    over the full int16 range (swept in tests)."""
-    val = samples.astype(np.int32) >> 3  # arithmetic shift: 13-bit domain
-    mask = np.where(val >= 0, 0xD5, 0x55)  # A-law sign bit SET = positive
-    mag = np.where(val >= 0, val, -val - 1)
-    # seg boundaries 31,63,...,4095 → bit_length-5, floor 0; mag <= 4095
-    seg = np.maximum(
-        np.floor(np.log2(np.maximum(mag, 1))).astype(np.int32) - 4, 0
-    )
-    quant = np.where(seg < 2, (mag >> 1) & 0x0F, (mag >> seg) & 0x0F)
-    aval = (seg << 4) | quant
-    out = np.where(seg >= 8, 0x7F, aval) ^ mask
-    return out.astype(np.uint8)
-
-
-def _wav_wrap(fmt_body: bytes, extra_chunks: bytes, data: bytes) -> bytes:
-    chunks = (
-        b"fmt " + len(fmt_body).to_bytes(4, "little") + fmt_body
-        + extra_chunks
-        + b"data" + len(data).to_bytes(4, "little") + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
-
-
-def encode_wav_g711(
-    samples: np.ndarray, sample_rate: int = 8000, law: str = "mulaw"
-) -> bytes:
-    """int16 samples (n,) or (n, ch) → G.711 mu-law/A-law RIFF bytes
-    (format tag 7 / 6) — the telephony WAV flavor."""
-    if samples.dtype != np.int16:
-        raise ValueError("encode_wav_g711 expects int16 samples")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    enc = mulaw_encode if law == "mulaw" else alaw_encode
-    tag = 7 if law == "mulaw" else 6
-    data = enc(samples.reshape(-1)).tobytes()
-    fmt_body = (
-        tag.to_bytes(2, "little")
-        + ch.to_bytes(2, "little")
-        + sample_rate.to_bytes(4, "little")
-        + (sample_rate * ch).to_bytes(4, "little")
-        + ch.to_bytes(2, "little")  # block align: 1 byte/sample/ch
-        + (8).to_bytes(2, "little")
-    )
-    fact = b"fact" + (4).to_bytes(4, "little") + n.to_bytes(4, "little")
-    return _wav_wrap(fmt_body, fact, data)
-
-
-def encode_wav_ima_adpcm(
-    samples: np.ndarray, sample_rate: int = 8000, block_align: int = 1024
-) -> bytes:
-    """int16 samples (n,) or (n, ch) → IMA/DVI ADPCM RIFF bytes (format
-    tag 0x11, 4-bit).  The standard greedy compressor: per block, the
-    header carries the first sample verbatim plus the carried step
-    index; each following sample becomes the 4-bit code whose decode
-    lands nearest under the current step.  Input is padded to whole
-    blocks with trailing silence (the spec's convention)."""
-    if samples.dtype != np.int16:
-        raise ValueError("encode_wav_ima_adpcm expects int16 samples")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    if ch not in (1, 2):
-        raise ValueError("IMA ADPCM supports 1-2 channels")
-    # After the 4*ch-byte header the block body is channel-interleaved
-    # word groups of 4*ch bytes each; a block_align that doesn't split
-    # into whole groups would silently shorten every block (the group
-    # loop floors), producing files shorter than their declared
-    # block_align.  Reject instead.
-    if block_align <= 4 * ch or (block_align - 4 * ch) % (4 * ch) != 0:
-        raise ValueError(
-            f"block_align {block_align} invalid for {ch}-channel IMA "
-            f"ADPCM: need 4*ch header + a whole number of 4*ch-byte "
-            f"word groups (e.g. {4 * ch + 4 * ch * max(1, (block_align - 4 * ch) // (4 * ch))})"
-        )
-    spb = (block_align - 4 * ch) * 2 // ch + 1  # samples/block/channel
-    n_blocks = (n + spb - 1) // spb
-    padded = np.zeros((n_blocks * spb, ch), dtype=np.int16)
-    padded[:n] = samples
-    out = bytearray()
-    idx = [0] * ch
-    for bi in range(n_blocks):
-        blk = padded[bi * spb : (bi + 1) * spb]
-        heads = bytearray()
-        chan_words = []
-        for c in range(ch):
-            pred = int(blk[0, c])
-            heads += int(pred).to_bytes(2, "little", signed=True)
-            heads += bytes([idx[c], 0])
-            codes = bytearray()
-            for s in blk[1:, c].astype(np.int32):
-                step = int(_IMA_STEPS[idx[c]])
-                delta = int(s) - pred
-                code = 8 if delta < 0 else 0
-                delta = abs(delta)
-                diff = step >> 3
-                if delta >= step:
-                    code |= 4
-                    delta -= step
-                    diff += step
-                if delta >= step >> 1:
-                    code |= 2
-                    delta -= step >> 1
-                    diff += step >> 1
-                if delta >= step >> 2:
-                    code |= 1
-                    diff += step >> 2
-                pred += -diff if code & 8 else diff
-                pred = max(-32768, min(32767, pred))
-                idx[c] = max(0, min(88, idx[c] + int(_IMA_INDEX_ADJ[code & 7])))
-                codes.append(code)
-            chan_words.append(codes)
-        out += heads
-        # interleave one 4-byte word (8 codes) per channel at a time
-        for g in range((spb - 1) // 8):
-            for c in range(ch):
-                cs = chan_words[c][g * 8 : g * 8 + 8]
-                for k in range(0, 8, 2):
-                    out.append(cs[k] | (cs[k + 1] << 4))
-    fmt_body = (
-        (0x11).to_bytes(2, "little")
-        + ch.to_bytes(2, "little")
-        + sample_rate.to_bytes(4, "little")
-        + (sample_rate * block_align // spb).to_bytes(4, "little")
-        + block_align.to_bytes(2, "little")
-        + (4).to_bytes(2, "little")
-        + (2).to_bytes(2, "little")  # cbSize
-        + spb.to_bytes(2, "little")  # wSamplesPerBlock
-    )
-    fact = b"fact" + (4).to_bytes(4, "little") + n.to_bytes(4, "little")
-    return _wav_wrap(fmt_body, fact, bytes(out))
-
-
-# IMA/DVI ADPCM (WAV format 0x11): standard step/index tables.
-_IMA_STEPS = np.array(
-    [7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-     41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-     190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-     724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-     2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-     6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-     16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767],
-    dtype=np.int32,
-)
-_IMA_INDEX_ADJ = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int32)
-
-
-def _ima_decode_codes(
-    codes: np.ndarray, pred0: np.ndarray, idx0: np.ndarray
-) -> np.ndarray:
-    """Vectorized-across-blocks IMA decode: ``codes`` (n_blocks, m)
-    4-bit codes, ``pred0``/``idx0`` (n_blocks,) header state → (n_blocks,
-    m) int16.  The per-sample recurrence runs over m (in-block
-    positions); every block advances in lockstep as numpy rows — the
-    same batch-the-independent-units strategy the JPEG decoder uses for
-    MCU rows."""
-    n_blocks, m = codes.shape
-    out = np.empty((n_blocks, m), dtype=np.int16)
-    pred = pred0.astype(np.int32).copy()
-    idx = np.clip(idx0.astype(np.int32), 0, 88)
-    for j in range(m):
-        code = codes[:, j].astype(np.int32)
-        step = _IMA_STEPS[idx]
-        diff = step >> 3
-        diff += np.where(code & 4, step, 0)
-        diff += np.where(code & 2, step >> 1, 0)
-        diff += np.where(code & 1, step >> 2, 0)
-        pred = np.where(code & 8, pred - diff, pred + diff)
-        pred = np.clip(pred, -32768, 32767)
-        idx = np.clip(idx + _IMA_INDEX_ADJ[code & 7], 0, 88)
-        out[:, j] = pred
-    return out
-
-
-def _decode_ima_adpcm(
-    data: bytes, ch: int, block_align: int
-) -> np.ndarray:
-    """WAV format-0x11 payload → (n, ch) int16.  Block layout per spec:
-    a 4-byte (predictor:int16, index:u8, pad) header per channel, then
-    channel-interleaved 4-byte words of eight 4-bit codes each (low
-    nibble first)."""
-    if ch not in (1, 2):
-        raise ValueError(f"IMA ADPCM supports 1-2 channels, got {ch}")
-    n_blocks = len(data) // block_align
-    rem = len(data) - n_blocks * block_align
-    tail: np.ndarray | None = None
-    # Real IMA WAV files commonly end in a legal short final block: the
-    # same 4*ch header followed by fewer (but still whole) 4*ch-byte
-    # word groups — decode it rather than dropping it.  A remainder
-    # SHORTER than one per-channel header holds zero decodable samples
-    # (a crawl truncated mid-write): drop it and keep the whole blocks
-    # instead of failing the whole decode.
-    if rem >= 4 * ch:
-        tail_len = 4 * ch + ((rem - 4 * ch) // (4 * ch)) * (4 * ch)
-        tail = _decode_ima_blocks(
-            np.frombuffer(
-                data, dtype=np.uint8, count=tail_len,
-                offset=n_blocks * block_align,
-            ).reshape(1, tail_len),
-            ch,
-        )
-    if n_blocks == 0:
-        return tail if tail is not None else np.zeros((0, ch), dtype=np.int16)
-    raw = np.frombuffer(data, dtype=np.uint8, count=n_blocks * block_align)
-    full = _decode_ima_blocks(raw.reshape(n_blocks, block_align), ch)
-    return full if tail is None else np.concatenate([full, tail], axis=0)
-
-
-def _decode_ima_blocks(blocks: np.ndarray, ch: int) -> np.ndarray:
-    """Decode a (k, L) uint8 array of equal-length IMA blocks."""
-    n_blocks = blocks.shape[0]
-    head = blocks[:, : 4 * ch]
-    pred0 = np.empty((n_blocks, ch), dtype=np.int32)
-    idx0 = np.empty((n_blocks, ch), dtype=np.int32)
-    for c in range(ch):
-        h = head[:, 4 * c : 4 * c + 4]
-        pred0[:, c] = (
-            h[:, :2].copy().view("<i2").astype(np.int32).reshape(n_blocks)
-        )
-        idx0[:, c] = h[:, 2]
-    body = blocks[:, 4 * ch :]
-    # (n_blocks, n_groups, ch, 4): groups of one 4-byte word per channel
-    words = body.reshape(n_blocks, -1, ch, 4)
-    spb = words.shape[1] * 8  # coded samples per block per channel
-    out = np.empty((n_blocks, spb + 1, ch), dtype=np.int16)
-    for c in range(ch):
-        wb = words[:, :, c, :].reshape(n_blocks, -1)  # (n_blocks, 4*groups)
-        codes = np.empty((n_blocks, spb), dtype=np.uint8)
-        codes[:, 0::2] = wb & 0x0F
-        codes[:, 1::2] = wb >> 4
-        out[:, 0, c] = pred0[:, c].astype(np.int16)
-        out[:, 1:, c] = _ima_decode_codes(codes, pred0[:, c], idx0[:, c])
-    return out.reshape(n_blocks * (spb + 1), ch)
-
-
-def _pcm_to_int16(data: bytes, ch: int, bits: int, fmt: int) -> np.ndarray:
-    """Integer/float PCM payload → (n, ch) int16 (high bits kept)."""
-    if fmt == 3:  # IEEE float
-        if bits not in (32, 64):
-            raise ValueError(f"IEEE float WAV must be 32/64-bit, got {bits}")
-        w = bits // 8
-        n = len(data) // (w * ch)
-        f = np.frombuffer(data, dtype=f"<f{w}", count=n * ch)
-        s = np.clip(f, -1.0, 1.0) * 32767.0
-        return np.round(s).astype(np.int16).reshape(n, ch)
-    if bits == 8:  # unsigned by spec
-        n = len(data) // ch
-        u = np.frombuffer(data, dtype=np.uint8, count=n * ch)
-        return (
-            ((u.astype(np.int16) - 128) << 8).astype(np.int16).reshape(n, ch)
-        )
-    if bits == 16:
-        n = len(data) // (2 * ch)
-        return np.frombuffer(data, dtype="<i2", count=n * ch).reshape(n, ch)
-    if bits == 24:
-        n = len(data) // (3 * ch)
-        u = np.frombuffer(data, dtype=np.uint8, count=n * ch * 3)
-        u = u.reshape(-1, 3).astype(np.int32)
-        v = u[:, 0] | (u[:, 1] << 8) | (u[:, 2] << 16)
-        v = np.where(v & 0x800000, v - 0x1000000, v)
-        return (v >> 8).astype(np.int16).reshape(n, ch)
-    if bits == 32:
-        n = len(data) // (4 * ch)
-        v = np.frombuffer(data, dtype="<i4", count=n * ch)
-        return (v >> 16).astype(np.int16).reshape(n, ch)
-    raise ValueError(f"unsupported PCM bit depth {bits}")
-
-
-def decode_wav(b: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE → ((n, ch) int16 array, sample_rate).  Walks the chunk
-    list per the RIFF spec (fmt/data may be preceded by LIST or fact
-    chunks; chunk bodies are word-aligned).  Native format matrix:
-    integer PCM 8/16/24/32-bit, IEEE float32/64, G.711 mu-law (7) and
-    A-law (6), IMA/DVI ADPCM (0x11, mono/stereo), and any of these
-    wrapped in WAVE_FORMAT_EXTENSIBLE (0xFFFE).  Wider-than-16-bit
-    sources keep their high 16 bits — the pipeline's canonical sample
-    type.  Perceptual codecs (MP3/Opus/AAC) are the one remaining
-    external-library seam."""
-    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    pos, fmt, data, fact_n = 12, None, None, None
-    while pos + 8 <= len(b):
-        cid = b[pos : pos + 4]
-        size = int.from_bytes(b[pos + 4 : pos + 8], "little")
-        body = b[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact" and size >= 4:
-            # true per-channel sample count — mandatory for compressed
-            # formats, where the payload is padded to whole blocks
-            fact_n = int.from_bytes(body[0:4], "little")
-        pos += 8 + size + (size & 1)  # chunks are 2-byte aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format = int.from_bytes(fmt[0:2], "little")
-    ch = int.from_bytes(fmt[2:4], "little")
-    sample_rate = int.from_bytes(fmt[4:8], "little")
-    block_align = int.from_bytes(fmt[12:14], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if audio_format == 0xFFFE:  # WAVE_FORMAT_EXTENSIBLE: real tag in GUID
-        if len(fmt) < 26:
-            raise ValueError("EXTENSIBLE fmt chunk too short")
-        audio_format = int.from_bytes(fmt[24:26], "little")
-    if ch < 1:
-        raise ValueError("channel count must be >= 1")
-    if audio_format in (1, 3):
-        return _pcm_to_int16(data, ch, bits, audio_format), sample_rate
-    if audio_format in (6, 7):  # G.711 A-law / mu-law: 8-bit codes
-        table = _ALAW_DECODE if audio_format == 6 else _MULAW_DECODE
-        n = len(data) // ch
-        codes = np.frombuffer(data, dtype=np.uint8, count=n * ch)
-        return table[codes].reshape(n, ch), sample_rate
-    if audio_format == 0x11:  # IMA/DVI ADPCM
-        out = _decode_ima_adpcm(data, ch, block_align)
-        if fact_n is not None and 0 <= fact_n < out.shape[0]:
-            # drop the encoder's final-block padding: without this a
-            # 777-sample source round-trips to 1010 samples of which
-            # 233 are fabricated silence, skewing rms/active_frac
-            out = out[:fact_n]
-        return out, sample_rate
-    raise NotImplementedError(
-        f"WAV format tag 0x{audio_format:02x} not supported natively "
-        "(PCM 8/16/24/32, float32/64, G.711 mu/A-law, IMA ADPCM are; "
-        "perceptual codecs like MP3/Opus would plug in at this seam, "
-        "like Pillow for images)"
-    )
-
-
-AUDIO_FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("rms", FloatType(), False),
-        StructField("zcr", FloatType(), False),
-    ]
-)
-
-
-def audio_frame_features(df: DataFrame, frame_ms: int = 25) -> DataFrame:
-    """WAV payload → per-frame RMS energy + zero-crossing rate (the two
-    features VAD-style corpus filters key on). Frames are non-overlapping
-    ``frame_ms`` windows of the mono mixdown; vectorized per file via a
-    reshape — no per-sample Python.
-
-    Scale: the payload expands ~n_frames× into 16-byte feature rows, a
-    huge byte *shrink* — decode early, then silence trimming / speech
-    filtering are plain JVM-side filters and aggregates on this frame
-    table (no re-decode)."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, idxs, rmss, zcrs = [], [], [], []
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                samples, sr = decode_wav(bytes(p))
-                mono = samples.astype(np.float64).mean(axis=1) / 32768.0
-                flen = max(1, sr * frame_ms // 1000)
-                n_frames = len(mono) // flen
-                if not n_frames:
-                    continue
-                fr = mono[: n_frames * flen].reshape(n_frames, flen)
-                rms = np.sqrt((fr * fr).mean(axis=1))
-                sign_flip = np.signbit(fr[:, 1:]) != np.signbit(fr[:, :-1])
-                zcr = sign_flip.mean(axis=1)
-                ids.extend([mid] * n_frames)
-                idxs.extend(range(n_frames))
-                rmss.extend(rms.astype(np.float32))
-                zcrs.extend(zcr.astype(np.float32))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "rms": rmss, "zcr": zcrs}
-            )
-
-    return df.filter(F.col("kind") == "audio").mapInPandas(feats, AUDIO_FRAME_SCHEMA)
-
-
-def audio_summary(frames: DataFrame, silence_rms: float = 0.01) -> DataFrame:
-    """Per-file rollup of the frame table — pure JVM aggregate (the
-    decode already happened): duration proxy, loudness, and the fraction
-    of non-silent frames that a speech-activity corpus filter thresholds
-    on."""
-    return frames.groupBy("media_id").agg(
-        F.count(F.lit(1)).alias("n_frames"),
-        F.round(F.avg("rms"), 6).alias("mean_rms"),
-        F.round(F.max("rms"), 6).alias("max_rms"),
-        F.round(F.avg("zcr"), 6).alias("mean_zcr"),
-        F.round(
-            F.avg((F.col("rms") > silence_rms).cast("double")), 6
-        ).alias("active_frac"),
-    )
-
-
-AUDIO_SPECTRAL_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("spectral_centroid_hz", FloatType(), True),
-        StructField("spectral_bandwidth_hz", FloatType(), True),
-        StructField("spectral_rolloff_hz", FloatType(), True),
-        StructField("spectral_flatness", FloatType(), True),
-    ]
-)
-
-
-def audio_spectral_features(
-    df: DataFrame, frame_ms: int = 32, rolloff: float = 0.85
-) -> DataFrame:
-    """WAV payload → per-frame SPECTRAL features via numpy rFFT
-    (round 7): centroid (power-weighted mean frequency — "where the
-    energy lives"), bandwidth (power-weighted std around the
-    centroid), rolloff (frequency below which ``rolloff`` of the
-    power sits), and flatness (geometric/arithmetic mean ratio — 1
-    for white noise, →0 for tones) — the classic music/speech/noise
-    discriminators that sit one level above ``audio_frame_features``'
-    time-domain RMS/ZCR pair in any audio-corpus curation stack.
-
-    All-silent frames emit NULL features (no spectrum to summarize) —
-    callers treating NULL as 'silence' must say so.  Hann-windowed
-    non-overlapping frames; the whole frame batch FFTs as ONE 2-D
-    ``numpy.fft.rfft`` call (no per-frame Python), and the per-file
-    expansion is a large byte shrink exactly like the RMS path —
-    decode once, then corpus filters are JVM-side predicates on this
-    frame table."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {
-                "media_id": [], "frame_idx": [], "spectral_centroid_hz": [],
-                "spectral_bandwidth_hz": [], "spectral_rolloff_hz": [],
-                "spectral_flatness": [],
-            }
-            for mid, p in zip(batch["media_id"], batch["payload"]):
-                samples, sr = decode_wav(bytes(p))
-                mono = samples.astype(np.float64).mean(axis=1) / 32768.0
-                flen = max(2, sr * frame_ms // 1000)
-                n_frames = len(mono) // flen
-                if not n_frames:
-                    continue
-                fr = mono[: n_frames * flen].reshape(n_frames, flen)
-                fr = fr * np.hanning(flen)[None, :]
-                spec = np.abs(np.fft.rfft(fr, axis=1)) ** 2  # power
-                freqs = np.fft.rfftfreq(flen, d=1.0 / sr)
-                total = spec.sum(axis=1)
-                live = total > 0
-                centroid = np.full(n_frames, np.nan)
-                bw = np.full(n_frames, np.nan)
-                roll = np.full(n_frames, np.nan)
-                flat = np.full(n_frames, np.nan)
-                if live.any():
-                    s = spec[live]
-                    t = total[live]
-                    c = (s * freqs[None, :]).sum(axis=1) / t
-                    centroid[live] = c
-                    bw[live] = np.sqrt(
-                        (s * (freqs[None, :] - c[:, None]) ** 2).sum(axis=1) / t
-                    )
-                    cum = np.cumsum(s, axis=1)
-                    idx = (cum >= rolloff * t[:, None]).argmax(axis=1)
-                    roll[live] = freqs[idx]
-                    # flatness = geometric/arithmetic mean ratio.  An
-                    # exact-zero bin makes the geometric mean 0, so
-                    # flatness is 0 by definition — treating it as
-                    # power 1 (log 0) while dividing by the full bin
-                    # count inflated flatness past 1 and flipped the
-                    # tonal/noisy ordering for pure tones
-                    has_zero = (s <= 0).any(axis=1)
-                    logmean = np.log(np.maximum(s, 1e-300)).sum(
-                        axis=1
-                    ) / s.shape[1]
-                    flat[live] = np.where(
-                        has_zero, 0.0, np.exp(logmean) / (t / s.shape[1])
-                    )
-                out["media_id"].extend([mid] * n_frames)
-                out["frame_idx"].extend(range(n_frames))
-                out["spectral_centroid_hz"].extend(
-                    np.where(np.isnan(centroid), None, centroid.round(3))
-                )
-                out["spectral_bandwidth_hz"].extend(
-                    np.where(np.isnan(bw), None, bw.round(3))
-                )
-                out["spectral_rolloff_hz"].extend(
-                    np.where(np.isnan(roll), None, roll.round(3))
-                )
-                out["spectral_flatness"].extend(
-                    np.where(np.isnan(flat), None, flat.round(6))
-                )
-            yield pd.DataFrame(out)
-
-    return df.filter(F.col("kind") == "audio").mapInPandas(
-        feats, AUDIO_SPECTRAL_SCHEMA
-    )

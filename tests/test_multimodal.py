@@ -253,310 +253,6 @@ def test_numpy_codec_rejects_compressed():
         _numpy_decode(b"II*\x00notatiffreally")
 
 
-def test_wav_roundtrip_mono_and_stereo():
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_wav, encode_wav
-
-    t = np.arange(4000)
-    mono = (10000 * np.sin(2 * np.pi * 440 * t / 8000)).astype(np.int16)
-    s, sr = decode_wav(encode_wav(mono, 8000))
-    assert sr == 8000 and s.shape == (4000, 1)
-    assert np.array_equal(s[:, 0], mono)
-
-    stereo = np.stack([mono, -mono], axis=1).astype(np.int16)
-    s2, sr2 = decode_wav(encode_wav(stereo, 16000))
-    assert sr2 == 16000 and s2.shape == (4000, 2)
-    assert np.array_equal(s2, stereo)
-
-
-def test_wav_rejects_perceptual_codecs():
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_wav, encode_wav
-
-    b = bytearray(encode_wav(np.zeros(16, dtype=np.int16), 8000))
-    b[20:22] = (0x55).to_bytes(2, "little")  # MP3 format tag
-    with pytest.raises(NotImplementedError, match="0x55"):
-        decode_wav(bytes(b))
-    with pytest.raises(ValueError, match="RIFF"):
-        decode_wav(b"nope")
-
-
-def _wav_bytes(fmt_tag, ch, rate, bits, data, fmt_extra=b""):
-    fmt = (
-        fmt_tag.to_bytes(2, "little")
-        + ch.to_bytes(2, "little")
-        + rate.to_bytes(4, "little")
-        + (rate * ch * max(bits // 8, 1)).to_bytes(4, "little")
-        + (ch * max(bits // 8, 1)).to_bytes(2, "little")
-        + bits.to_bytes(2, "little")
-        + fmt_extra
-    )
-    chunks = (
-        b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        + b"data" + len(data).to_bytes(4, "little") + data
-    )
-    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
-
-
-def test_wav_pcm_width_matrix():
-    """8/24/32-bit integer PCM and float32/64 all decode to the high 16
-    bits of the source — the pipeline's canonical sample type."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_wav
-
-    # 8-bit unsigned: 0 → -32768, 128 → 0, 255 → +32512
-    s, sr = decode_wav(_wav_bytes(1, 1, 8000, 8, bytes([0, 128, 255])))
-    assert sr == 8000 and s[:, 0].tolist() == [-32768, 0, 32512]
-
-    # 24-bit: high 16 bits kept, sign extended
-    vals24 = [0x7FFFFF, -0x800000, 0x000100]
-    data24 = b"".join(int(v & 0xFFFFFF).to_bytes(3, "little") for v in vals24)
-    s, _ = decode_wav(_wav_bytes(1, 1, 8000, 24, data24))
-    assert s[:, 0].tolist() == [v >> 8 for v in vals24]
-
-    # 32-bit int: high 16 bits kept
-    v32 = np.array([2**31 - 1, -(2**31), 65536], dtype="<i4")
-    s, _ = decode_wav(_wav_bytes(1, 1, 8000, 32, v32.tobytes()))
-    assert s[:, 0].tolist() == [(2**31 - 1) >> 16, -(2**15), 1]
-
-    # float32 / float64: scaled to int16 with clipping
-    f32 = np.array([0.0, 1.0, -1.0, 0.5, 2.0], dtype="<f4")
-    s, _ = decode_wav(_wav_bytes(3, 1, 8000, 32, f32.tobytes()))
-    assert s[:, 0].tolist() == [0, 32767, -32767, 16384, 32767]
-    f64 = np.array([0.25, -2.0], dtype="<f8")
-    s, _ = decode_wav(_wav_bytes(3, 1, 8000, 64, f64.tobytes()))
-    assert s[:, 0].tolist() == [8192, -32767]
-
-
-def test_wav_extensible_wrapper():
-    """WAVE_FORMAT_EXTENSIBLE (0xFFFE) resolves the real tag from the
-    SubFormat GUID."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_wav
-
-    pcm = np.array([1000, -1000, 123], dtype="<i2")
-    # cbSize(2) + validBits(2) + channelMask(4) + GUID(16, tag in first 2)
-    extra = (
-        (22).to_bytes(2, "little")
-        + (16).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + (1).to_bytes(2, "little")
-        + b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-    )
-    s, sr = decode_wav(
-        _wav_bytes(0xFFFE, 1, 44100, 16, pcm.tobytes(), fmt_extra=extra)
-    )
-    assert sr == 44100 and s[:, 0].tolist() == [1000, -1000, 123]
-
-
-def test_wav_g711_exact_vs_reference():
-    """G.711 mu-law and A-law: all 256 codes round-trip through
-    decode→encode exactly (mu-law's +0 alias 0x7F→0xFF is the one
-    spec-sanctioned exception), and — when the stdlib audioop reference
-    is importable — encode AND decode agree bit-for-bit with it."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        _ALAW_DECODE,
-        _MULAW_DECODE,
-        alaw_encode,
-        decode_wav,
-        encode_wav_g711,
-        mulaw_encode,
-    )
-
-    codes = np.arange(256, dtype=np.uint8)
-    mu_rt = mulaw_encode(_MULAW_DECODE[codes])
-    mismatch = np.nonzero(mu_rt != codes)[0]
-    assert mismatch.tolist() in ([], [127])  # 0x7F and 0xFF both decode 0
-    assert (alaw_encode(_ALAW_DECODE[codes]) == codes).all()
-
-    t = np.arange(4000)
-    sine = (12000 * np.sin(2 * np.pi * 440 * t / 8000)).astype(np.int16)
-    try:
-        import audioop  # removed in Python 3.13 — reference check only
-    except ImportError:
-        audioop = None
-    if audioop is not None:
-        # FULL int16 sweep, both laws, both directions.  A sine-only
-        # check is latently flaky: the pre-r11 abs()-based encoders
-        # mismatched audioop on 381 mu-law / 127 A-law values (negative
-        # samples at quantization boundaries, e.g. -31611 mu, -31744 A)
-        # that a 440 Hz sine happens to avoid entirely.
-        full = np.arange(-32768, 32768, dtype=np.int16)
-        assert (
-            np.frombuffer(audioop.lin2ulaw(full.tobytes(), 2), np.uint8)
-            == mulaw_encode(full)
-        ).all()
-        assert (
-            np.frombuffer(audioop.lin2alaw(full.tobytes(), 2), np.uint8)
-            == alaw_encode(full)
-        ).all()
-        all_codes = bytes(range(256))
-        assert (
-            np.frombuffer(audioop.ulaw2lin(all_codes, 2), np.int16)
-            == _MULAW_DECODE
-        ).all()
-        assert (
-            np.frombuffer(audioop.alaw2lin(all_codes, 2), np.int16)
-            == _ALAW_DECODE
-        ).all()
-
-    # end-to-end through the RIFF wrapper, mono + stereo
-    s, sr = decode_wav(encode_wav_g711(sine, 8000, "mulaw"))
-    assert sr == 8000 and s.shape == (4000, 1)
-    assert np.abs(s[:, 0].astype(int) - sine.astype(int)).max() <= 700
-    st = np.stack([sine, -sine], axis=1).astype(np.int16)
-    s2, _ = decode_wav(encode_wav_g711(st, 8000, "alaw"))
-    assert s2.shape == (4000, 2)
-    assert np.abs(s2.astype(int) - st.astype(int)).max() <= 600
-
-
-def test_wav_ima_adpcm_roundtrip_and_reference():
-    """IMA/DVI ADPCM: the vectorized-across-blocks decoder agrees
-    bit-for-bit with the stdlib audioop reference on a random code
-    stream, and encode→decode tracks a sine within the step-table
-    bound once past the cold-start adaptation window."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        _ima_decode_codes,
-        decode_wav,
-        encode_wav_ima_adpcm,
-    )
-
-    try:
-        import audioop
-    except ImportError:
-        audioop = None
-    if audioop is not None:
-        rng = np.random.default_rng(7)
-        codes = rng.integers(0, 16, 2000).astype(np.uint8)
-        packed = bytes(
-            (int(codes[i]) << 4) | int(codes[i + 1])
-            for i in range(0, 2000, 2)
-        )
-        ref = np.frombuffer(
-            audioop.adpcm2lin(packed, 2, (0, 0))[0], dtype=np.int16
-        )
-        mine = _ima_decode_codes(codes[None, :], np.array([0]), np.array([0]))
-        assert (ref == mine[0]).all()
-
-    t = np.arange(4000)
-    sine = (12000 * np.sin(2 * np.pi * 440 * t / 8000)).astype(np.int16)
-    s, sr = decode_wav(encode_wav_ima_adpcm(sine, 8000, block_align=256))
-    assert sr == 8000 and s.shape[1] == 1 and s.shape[0] >= 4000
-    err = np.abs(s[:4000, 0].astype(int) - sine.astype(int))
-    assert err[64:].max() <= 700  # steady-state tracking
-    # stereo: channels decode independently and stay mirrored
-    st = np.stack([sine, -sine], axis=1).astype(np.int16)
-    s2, _ = decode_wav(encode_wav_ima_adpcm(st, 8000, block_align=512))
-    err2 = np.abs(s2[:4000].astype(int) - st.astype(int))
-    assert err2[64:].max() <= 700
-
-
-def test_wav_ima_adpcm_block_align_validation_and_short_tail():
-    """Encoder rejects a block_align whose body isn't whole 4*ch word
-    groups (it would silently truncate every block); decoder recovers a
-    legal short final block instead of dropping it."""
-    import numpy as np
-    import pytest
-
-    from opentimes_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_ima_adpcm,
-    )
-
-    t = np.arange(3000)
-    sine = (9000 * np.sin(2 * np.pi * 330 * t / 8000)).astype(np.int16)
-    # mono: body 246 bytes is not a multiple of 4 → reject
-    with pytest.raises(ValueError, match="block_align"):
-        encode_wav_ima_adpcm(sine, 8000, block_align=250)
-    # stereo: body must be a multiple of 8
-    st = np.stack([sine, -sine], axis=1).astype(np.int16)
-    with pytest.raises(ValueError, match="block_align"):
-        encode_wav_ima_adpcm(st, 8000, block_align=260)
-
-    # Short final block: re-wrap a valid stream with its last block cut
-    # down to header + half its word groups (still 4*ch-aligned — the
-    # spec-legal truncated tail real files carry).  All samples up to
-    # the truncation point must decode identically to the full file.
-    wav = encode_wav_ima_adpcm(sine, 8000, block_align=256)
-    full, _ = decode_wav(wav)
-    di = wav.index(b"data")
-    dlen = int.from_bytes(wav[di + 4 : di + 8], "little")
-    body = wav[di + 8 : di + 8 + dlen]
-    cut = len(body) - 256 + 4 + 124  # last block: 4B header + 124B groups
-    short = body[:cut]
-    rewrapped = (
-        wav[:di]
-        + b"data"
-        + len(short).to_bytes(4, "little")
-        + short
-        + wav[di + 8 + dlen :]
-    )
-    got, _ = decode_wav(rewrapped)
-    kept = 1 + 124 * 2  # header sample + 2 codes/byte in the tail block
-    n_full_blocks = len(body) // 256 - 1
-    expect_n = n_full_blocks * (1 + 252 * 2) + kept
-    assert got.shape[0] == expect_n
-    assert (got[:, 0] == full[: got.shape[0], 0]).all()
-
-    # Sub-header garbage tail (a crawl truncated mid-write): fewer than
-    # 4*ch trailing bytes hold ZERO decodable samples — the decoder
-    # keeps every whole block instead of failing the file.
-    garbage = body[: 3 * 256] + b"\x01\x02\x03"
-    rewrapped2 = (
-        wav[:di]
-        + b"data"
-        + len(garbage).to_bytes(4, "little")
-        + garbage
-        + wav[di + 8 + dlen :]
-    )
-    got2, _ = decode_wav(rewrapped2)
-    assert got2.shape[0] == 3 * (1 + 252 * 2)
-    assert (got2[:, 0] == full[: got2.shape[0], 0]).all()
-
-
-def test_audio_frame_features_sine_vs_silence(spark):
-    """440 Hz sine at sr=8000: ZCR per frame ~ 2*440/8000 = 0.11; RMS ~
-    A/sqrt(2). Silence: both exactly 0."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        audio_frame_features,
-        audio_summary,
-        encode_wav,
-    )
-
-    t = np.arange(8000)
-    amp = 16384
-    sine = (amp * np.sin(2 * np.pi * 440 * t / 8000)).astype(np.int16)
-    silence = np.zeros(8000, dtype=np.int16)
-    df = spark.createDataFrame(
-        [
-            (0, "audio", bytearray(encode_wav(sine, 8000)), "audio/wav"),
-            (1, "audio", bytearray(encode_wav(silence, 8000)), "audio/wav"),
-            (2, "image", bytearray(b"P6 not audio"), "image/x-ppm"),
-        ],
-        "media_id long, kind string, payload binary, mime string",
-    )
-    frames = audio_frame_features(df, frame_ms=25).cache()
-    got = {r.media_id for r in frames.select("media_id").distinct().collect()}
-    assert got == {0, 1}  # image row filtered out, never decoded
-    # 1 s / 25 ms = 40 frames per file
-    per = {r.media_id: r for r in audio_summary(frames).collect()}
-    assert per[0].n_frames == 40 and per[1].n_frames == 40
-    assert abs(per[0].mean_rms - amp / 32768 / np.sqrt(2)) < 0.01
-    assert abs(per[0].mean_zcr - 2 * 440 / 8000) < 0.01
-    assert per[1].mean_rms == 0.0 and per[1].mean_zcr == 0.0
-    assert per[0].active_frac == 1.0 and per[1].active_frac == 0.0
-
-
 def test_png_round_trip_all_color_types():
     """encode→decode identity for gray/RGB/RGBA (filter-0 rows)."""
     import numpy as np
@@ -801,51 +497,6 @@ def test_numpy_codec_decodes_gif_payload_in_spark(spark):
     assert (r["width"], r["height"]) == (17, 6)
 
 
-def test_avi_demux_round_trip_and_selective_slices(spark):
-    """demux_avi_frames recovers every frame's exact bytes by offset,
-    and avi_frame_slices ships ONLY the sampled frames out of the
-    Spark pipeline — frame-sized rows, full payload never emitted."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        avi_frame_slices,
-        demux_avi_frames,
-        encode_avi,
-    )
-
-    rng = np.random.RandomState(4)
-    frames = [rng.bytes(30 + i * 7) for i in range(23)]  # odd sizes → padding
-    avi = encode_avi(frames)
-    got = demux_avi_frames(avi)
-    assert [i for i, _, _ in got] == list(range(23))
-    for i, off, size in got:
-        assert avi[off : off + size] == frames[i]
-
-    df = spark.createDataFrame(
-        [(0, "video", bytearray(avi), "video/avi")], MEDIA_SCHEMA
-    )
-    rows = {r["frame_idx"]: r for r in avi_frame_slices(df, every_n=10).collect()}
-    assert sorted(rows) == [0, 10, 20]
-    for i, r in rows.items():
-        assert bytes(r["frame_bytes"]) == frames[i]
-        assert r["n_bytes"] == len(frames[i])
-
-
-def test_avi_demux_rejects_non_avi():
-    import pytest
-
-    from opentimes_spark.operators.multimodal import demux_avi_frames
-
-    with pytest.raises(ValueError, match="not an AVI"):
-        demux_avi_frames(b"RIFFxxxxWAVE....")
-    with pytest.raises(ValueError, match="movi"):
-        demux_avi_frames(b"RIFF\x04\x00\x00\x00AVI ")
-
-
-# --- native baseline JPEG (round 7) ----------------------------------------
-
-
 def test_jpeg_round_trip_solid_and_gradient():
     """Lossy round-trip: solid colors reconstruct (near-)exactly; a
     smooth gradient at quality 90 stays within a tight mean-abs-error
@@ -1071,58 +722,6 @@ def test_numpy_codec_decodes_jpeg_payload_in_spark(spark):
         for r in decode_image(df, codec="numpy").collect()
     }
     assert got == {i: d for i, d in enumerate(dims)}
-
-
-def test_audio_spectral_features_analytic_signals(spark):
-    """Spectral features against signals with KNOWN spectra: a 1 kHz
-    sine's centroid/rolloff sit at ~1 kHz with near-zero bandwidth and
-    near-zero flatness; deterministic pseudo-white noise has flatness
-    near 1 and a centroid far above the tone's; silence emits NULL
-    features (no spectrum)."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        audio_spectral_features,
-        encode_wav,
-    )
-
-    sr = 8000
-    t = np.arange(sr)
-    sine = (16384 * np.sin(2 * np.pi * 1000 * t / sr)).astype(np.int16)
-    rng = np.random.RandomState(7)
-    noise = rng.randint(-16384, 16384, sr).astype(np.int16)
-    silence = np.zeros(sr, dtype=np.int16)
-    df = spark.createDataFrame(
-        [
-            (0, "audio", bytearray(encode_wav(sine, sr)), "audio/wav"),
-            (1, "audio", bytearray(encode_wav(noise, sr)), "audio/wav"),
-            (2, "audio", bytearray(encode_wav(silence, sr)), "audio/wav"),
-        ],
-        "media_id long, kind string, payload binary, mime string",
-    )
-    rows = audio_spectral_features(df, frame_ms=32).collect()
-    by_id: dict[int, list] = {}
-    for r in rows:
-        by_id.setdefault(r["media_id"], []).append(r)
-
-    sine_c = np.mean([r["spectral_centroid_hz"] for r in by_id[0]])
-    sine_bw = np.mean([r["spectral_bandwidth_hz"] for r in by_id[0]])
-    sine_roll = np.mean([r["spectral_rolloff_hz"] for r in by_id[0]])
-    sine_flat = np.mean([r["spectral_flatness"] for r in by_id[0]])
-    assert abs(sine_c - 1000) < 60, sine_c          # tone at 1 kHz
-    assert sine_bw < 200, sine_bw                   # narrow line
-    assert abs(sine_roll - 1000) < 100, sine_roll
-    assert sine_flat < 0.01, sine_flat              # tonal
-
-    noise_flat = np.mean([r["spectral_flatness"] for r in by_id[1]])
-    noise_c = np.mean([r["spectral_centroid_hz"] for r in by_id[1]])
-    assert noise_flat > 0.3, noise_flat             # broadband
-    assert noise_c > 1500, noise_c                  # energy spread high
-
-    assert all(r["spectral_centroid_hz"] is None for r in by_id[2])
-    # determinism: identical payloads → identical frames
-    again = audio_spectral_features(df, frame_ms=32).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
 def test_resize_bilinear_antialiases_vs_nearest(spark):
@@ -1786,47 +1385,3 @@ def test_to_rgb8_la_keeps_luma_drops_alpha():
     assert (rgb[:, :, 0] == la[:, :, 0]).all()
     assert (rgb[:, :, 1] == la[:, :, 0]).all()
     assert (rgb[:, :, 2] == la[:, :, 0]).all()
-
-
-def test_wav_ima_fact_chunk_trims_block_padding():
-    """The encoder pads to whole blocks and records the true count in
-    the mandatory fact chunk; decode must honor it instead of returning
-    fabricated trailing silence."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_ima_adpcm,
-    )
-
-    t = np.arange(777)
-    sine = (8000 * np.sin(2 * np.pi * 440 * t / 8000)).astype(np.int16)
-    got, sr = decode_wav(encode_wav_ima_adpcm(sine, 8000, block_align=256))
-    assert got.shape == (777, 1)
-
-
-def test_audio_flatness_in_unit_range(spark):
-    """An exact-zero power bin makes the geometric mean 0, so flatness
-    is 0 by definition — it used to be inflated past 1 (treating zero
-    bins as power 1 while dividing by the full bin count), classifying
-    pure tones as maximally noisy."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        audio_spectral_features,
-        encode_wav,
-    )
-
-    t = np.arange(4096)
-    # exact-bin tone: cancellations produce exact-zero power bins
-    tone = (12000 * np.sin(2 * np.pi * 1000 * t / 8000)).astype(np.int16)
-    df = spark.createDataFrame(
-        [(1, "audio", bytearray(encode_wav(tone, 8000)))],
-        "media_id long, kind string, payload binary",
-    )
-    rows = audio_spectral_features(df).collect()
-    flats = [
-        r["spectral_flatness"] for r in rows
-        if r["spectral_flatness"] is not None
-    ]
-    assert flats and all(0.0 <= f <= 1.0 for f in flats)
