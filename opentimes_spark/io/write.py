@@ -52,11 +52,13 @@ def write_sorted_partitioned(
     zstd_level: int | None = 12,
     bloom_filter_cols: list[str] | None = None,
     bloom_filter_ndv: int = 100_000,
-    dynamic_overwrite: bool = False,
 ) -> None:
     """Write ``df`` Hive-partitioned, range-sorted on ``order_by``.
 
     - ``partition_by``: Hive partition keys (directory layout; pruning).
+      The overwrite replaces only the partitions ``df`` holds rows for
+      (``partitionOverwriteMode=dynamic``); the others under ``path``
+      stay, so publishing one state keeps every other state's leaves.
     - ``order_by``: in-file sort keys → tight row-group zone maps.
     - ``max_records_per_file``: caps file size (reference targets ≤475 MB
       per file via FILE_SIZE_BYTES, create_public_files.py:95).
@@ -78,9 +80,6 @@ def write_sorted_partitioned(
       the reader drops row groups on a definite bloom miss without
       touching data pages.  ``bloom_filter_ndv`` sizes the bitset
       (expected distinct values per row group).
-    - ``dynamic_overwrite``: replace only the partitions ``df`` holds
-      rows for (``partitionOverwriteMode=dynamic``) instead of every
-      partition under ``path``.
     """
     from pyspark.sql import functions as F
 
@@ -97,9 +96,8 @@ def write_sorted_partitioned(
         writer = writer.option(
             f"parquet.bloom.filter.expected.ndv#{col}", str(bloom_filter_ndv)
         )
-    if dynamic_overwrite:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
     if partition_by:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 

@@ -478,7 +478,6 @@ def write_public(
         order_by=["origin_id", "destination_id"],
         max_records_per_file=max_records_per_file,
         observation=observation,
-        dynamic_overwrite=True,
     )
 
 

@@ -26,9 +26,12 @@ pauses and no concurrent cycle.  An initial heap equal to the driver
 memory saved no more CPU and slowed start-up.  The flags go through
 ``spark.driver.defaultJavaOptions``, which the launcher puts before
 ``spark.driver.extraJavaOptions`` and ``--driver-java-options``, so
-flags passed there still apply, and a user's own ``-Xms`` wins.  They
-act only when ``get_spark`` starts the JVM: a session reused through
-``getOrCreate`` keeps the flags its JVM started with.
+flags passed there still apply, and a user's own ``-Xms`` wins.
+``get_spark`` owns ``spark.driver.defaultJavaOptions``: its value
+replaces one set in ``spark-defaults.conf``, so site-wide driver flags
+belong in ``spark.driver.extraJavaOptions`` or ``--driver-java-options``.
+The flags act only when ``get_spark`` starts the JVM: a session reused
+through ``getOrCreate`` keeps the flags its JVM started with.
 """
 
 from __future__ import annotations

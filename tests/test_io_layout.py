@@ -528,6 +528,22 @@ def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, tmp_
     assert got == {(1, "a"), (20, "b"), (21, "b")}
 
 
+def test_sorted_partitioned_overwrite_keeps_other_partitions(spark, tmp_path):
+    """write_sorted_partitioned replaces only the partitions it holds
+    rows for, with the session's partitionOverwriteMode left static."""
+    root = str(tmp_path / "dyn_sorted")
+    for rows in ([(1, "a"), (2, "b")], [(20, "b")]):
+        write_sorted_partitioned(
+            spark.createDataFrame(rows, "id long, part string"),
+            root,
+            partition_by=["part"],
+            order_by=["id"],
+        )
+
+    got = {(r.id, r.part) for r in spark.read.parquet(root).collect()}
+    assert got == {(1, "a"), (20, "b")}
+
+
 def test_compact_dir_lock_and_trailing_slash(spark, tmp_path):
     """compact_dir holds an O_EXCL lock (a second run fails loudly
     instead of destroying the first's state) and normalizes a trailing
