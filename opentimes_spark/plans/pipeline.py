@@ -22,13 +22,17 @@ Stage parity map:
   site/assets/js/map.js:593-614, 702-724; SURVEY.md §3.3): each leaf
   file's footer parsed once and cached, row groups kept by their
   origin_id min/max, read with pyarrow, the key matched on the ids'
-  dictionary codes, no Spark job
+  dictionary codes, the rows handed to the JVM as one Arrow stream
+  through py4j handles cached per gateway (``_local_frame``) and
+  returned as a local relation: no Spark job
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import re
+import tempfile
 import uuid
 from urllib.parse import urlparse
 
@@ -562,13 +566,58 @@ def lookup_row_groups(
     return picked
 
 
+@functools.cache
+def _arrow_handles(jvm) -> tuple:
+    """``PythonSQLUtils.readArrowStreamFromFile`` and ``.toDataFrame``
+    on the gateway whose py4j view is ``jvm``: the reflective lookups
+    that find them run once per gateway, not once per call."""
+    utils = jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return utils.readArrowStreamFromFile, utils.toDataFrame
+
+
+def _local_frame(spark, table: pa.Table) -> DataFrame:
+    """``table`` (``_ARROW_SCHEMA``) as a ``LOOKUP_SCHEMA`` DataFrame of
+    ``spark`` over a local relation, so collecting it runs no Spark job.
+
+    The hand-off ``spark.createDataFrame(pa.Table)`` makes, without its
+    per-call reflection: the table goes to the context's temp directory
+    as one Arrow IPC stream, which the JVM reads and turns into a local
+    relation through ``PythonSQLUtils.readArrowStreamFromFile`` and
+    ``.toDataFrame``.  Those two py4j handles are resolved once per
+    gateway; the session is taken on every call, so the frame belongs
+    to the session passed in.  The stream goes to local disk even under
+    ``spark.io.encryption.enabled`` (where ``createDataFrame`` sends it
+    through a socket instead); it holds published rows, which are public.
+
+    Apart from ``io.read.configure_object_store``'s Hadoop configuration
+    (``sparkContext._jsc``), this is the package's only use of private
+    PySpark surface: the py4j view ``spark._jvm``,
+    ``spark._jsparkSession``, the context's ``_temp_dir`` and the
+    ``DataFrame(jdf, spark)`` constructor."""
+    read_stream, to_frame = _arrow_handles(spark._jvm)
+    fd, path = tempfile.mkstemp(suffix=".arrow", dir=spark.sparkContext._temp_dir)
+    try:
+        with os.fdopen(fd, "wb") as f, pa.ipc.new_stream(f, table.schema) as out:
+            # Spark's JVM reader returns no rows past the first empty
+            # record batch of the stream.  pyarrow's filter drops the
+            # empty chunks of the row groups without the key (pyarrow
+            # 16.1), but does not promise to: write one batch
+            out.write_table(table.combine_chunks())
+        batches = read_stream(path)
+    finally:
+        os.remove(path)
+    jdf = to_frame(batches, LOOKUP_SCHEMA.json(), spark._jsparkSession)
+    return DataFrame(jdf, spark)
+
+
 def _lookup(
     spark, public_dir: str, column: str, key: str, keys: dict[str, str]
 ) -> DataFrame:
     """The rows of one partition whose ``column`` equals ``key``, read
-    with pyarrow from the row groups ``lookup_row_groups`` picks, matched
-    on the ids' Parquet dictionary codes and handed to Spark as a local
-    relation: collecting it runs no job."""
+    with pyarrow from the row groups ``lookup_row_groups`` picks and
+    matched on the ids' Parquet dictionary codes.  The rows (none for an
+    absent partition or key) reach Spark as a local relation through
+    ``_local_frame``: collecting the frame runs no Spark job."""
     tables = []
     for path, meta, rgs in lookup_row_groups(public_dir, column, key, keys):
         # the ids come back dictionary-encoded whatever their pages'
@@ -576,7 +625,7 @@ def _lookup(
         with pq.ParquetFile(path, metadata=meta, read_dictionary=_IDS) as pf:
             tables.append(pf.read_row_groups(rgs, columns=LOOKUP_SCHEMA.names))
     if not tables:
-        return spark.createDataFrame([], LOOKUP_SCHEMA)
+        return _local_frame(spark, _ARROW_SCHEMA.empty_table())
     table = pa.concat_tables(tables)
     # match the key against each chunk's own dictionary and keep the
     # rows carrying a matching code: only the kept rows' ids are decoded
@@ -584,11 +633,9 @@ def _lookup(
         pc.is_in(ids.indices, pc.indices_nonzero(pc.equal(ids.dictionary, key)))
         for ids in table[column].chunks
     ]
-    table = table.filter(pa.chunked_array(keep, pa.bool_())).cast(_ARROW_SCHEMA)
-    # createDataFrame(pa.Table) drops every record batch after an empty
-    # one (PySpark 4.1.2), and the filter leaves an empty batch for each
-    # kept row group without the key: hand it one batch
-    return spark.createDataFrame(table.combine_chunks(), schema=LOOKUP_SCHEMA)
+    return _local_frame(
+        spark, table.filter(pa.chunked_array(keep, pa.bool_())).cast(_ARROW_SCHEMA)
+    )
 
 
 def point_lookup(

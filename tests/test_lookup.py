@@ -1,8 +1,8 @@
 """Point and destination lookups read the published leaf with pyarrow
 from cached footers (plans/pipeline.py ``_lookup``) and match the key on
-the ids' dictionary codes.  The Spark scan of the published root that
-lookups used to run is kept here as the oracle: every lookup must return
-its rows and its schema."""
+the ids' dictionary codes; the rows reach Spark as a local relation.
+The Spark scan of the published root that lookups used to run is kept
+here as the oracle: every lookup must return its rows and its schema."""
 
 from __future__ import annotations
 
@@ -16,8 +16,10 @@ from pyspark.sql import functions as F
 
 from opentimes_spark.io.write import row_group_stats
 from opentimes_spark.plans.pipeline import (
+    _ARROW_SCHEMA,
     LOOKUP_SCHEMA,
     PARTITION_KEYS,
+    _local_frame,
     destination_lookup,
     lookup_row_groups,
     point_lookup,
@@ -203,16 +205,29 @@ def test_origin_lookup_reads_only_its_row_groups(published):
 
 
 def test_lookup_keeps_rows_after_an_empty_row_group(spark, published):
-    """PySpark's createDataFrame(pa.Table) drops every record batch that
-    follows an empty one.  The rare destination's rows sit in the last
-    row groups, after row groups whose filtered batch is empty; every
-    one of them must come back."""
+    """Spark's JVM reader of the hand-off's Arrow stream returns no rows
+    past the first empty record batch.  The rare destination's rows sit
+    in the last row groups, after row groups that filter to nothing;
+    every one of them must come back."""
     path, _, rgs = lookup_row_groups(published, "destination_id", RARE_DEST, KEYS)[0]
     head = pq.ParquetFile(path).read_row_group(rgs[0], columns=["destination_id"])
     assert not pc.any(pc.equal(head["destination_id"], RARE_DEST)).as_py()
     got = sorted_rows(destination_lookup(spark, published, RARE_DEST))
     want = sorted((o, d, t) for o, d, t in PAIRS if d == RARE_DEST)
     assert got == want and len(got) == 3
+
+
+def test_hand_off_keeps_rows_after_an_empty_batch(spark):
+    """pyarrow's filter drops empty chunks, so the test above cannot
+    hand Spark an empty batch; a table holding one must still come back
+    whole."""
+    rows = [(o, DESTS[0], float(i)) for i, o in enumerate(ORIGINS[:5])]
+    whole = pa.Table.from_pylist(
+        [dict(zip(LOOKUP_SCHEMA.names, r)) for r in rows], schema=_ARROW_SCHEMA
+    )
+    table = pa.concat_tables([whole.slice(0, 2), whole.slice(2, 0), whole.slice(2)])
+    assert [b.num_rows for b in table.to_batches()] == [2, 0, 3]
+    assert sorted_rows(_local_frame(spark, table)) == rows
 
 
 def test_republish_is_read_afresh(spark, tmp_path):
@@ -252,6 +267,55 @@ def test_absent_partition_gives_an_empty_frame(spark, published):
     for fn, key in ((point_lookup, ORIGINS[0]), (destination_lookup, DESTS[0])):
         got = fn(spark, published, key, state="99")
         assert got.schema == LOOKUP_SCHEMA and got.collect() == []
+
+
+def test_empty_lookups_run_no_spark_job(spark, published):
+    """An absent partition's lookup and an absent key's come back as
+    local relations, as a present key's does: collecting them starts no
+    Spark job (the DAG scheduler's next job id does not move)."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    for fn, key in ((point_lookup, ORIGINS[0]), (destination_lookup, DESTS[0])):
+        assert fn(spark, published, key, state="99").collect() == []
+    assert point_lookup(spark, published, "17031999999").collect() == []
+    assert destination_lookup(spark, published, "18097999999").collect() == []
+    assert len(point_lookup(spark, published, ORIGINS[0]).collect()) == 6
+    assert scheduler.nextJobId() == before
+
+
+def test_warm_lookups_send_no_reflective_py4j_commands(spark, published, monkeypatch):
+    """Each ``r u`` (unknown member) or ``r m`` (class member) command
+    makes the JVM resolve a name by reflection, scanning the imported
+    packages' jars on a miss.  Once the hand-off's handles are resolved,
+    a lookup and its collect send none."""
+    point_lookup(spark, published, ORIGINS[0]).collect()
+    destination_lookup(spark, published, DESTS[0]).collect()
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def recording(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", recording)
+        assert len(point_lookup(spark, published, ORIGINS[1]).collect()) == 6
+        assert len(destination_lookup(spark, published, DESTS[1]).collect()) == 12
+    assert sent
+    assert [c for c in sent if c.startswith(("r\nu\n", "r\nm\n"))] == []
+
+
+def test_lookup_frame_belongs_to_the_session_passed_in(spark, published):
+    """The hand-off's handles are shared, but the frame is built in the
+    session the caller passes: a view of it is visible there only."""
+    other = spark.newSession()
+    for fn, key in ((point_lookup, ORIGINS[2]), (destination_lookup, DESTS[2])):
+        got = fn(other, published, key)
+        assert got.sparkSession is other
+        assert sorted_rows(got) == sorted_rows(fn(spark, published, key))
+    got.createOrReplaceTempView("lookup_in_other")
+    assert other.catalog.tableExists("lookup_in_other")
+    assert not spark.catalog.tableExists("lookup_in_other")
 
 
 def test_missing_root_is_refused_by_name(spark, tmp_path):
