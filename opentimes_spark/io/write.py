@@ -50,8 +50,6 @@ def write_sorted_partitioned(
     num_range_partitions: int | None = None,
     observation=None,
     zstd_level: int | None = 12,
-    bloom_filter_cols: list[str] | None = None,
-    bloom_filter_ndv: int = 100_000,
 ) -> None:
     """Write ``df`` Hive-partitioned, range-sorted on ``order_by``.
 
@@ -72,14 +70,6 @@ def write_sorted_partitioned(
       Passed as the ``parquet.compression.codec.zstd.level`` writer
       option; effect verified by a file-size delta test
       (tests/test_io_layout.py). None → codec default (3).
-    - ``bloom_filter_cols``: write a parquet bloom filter per listed
-      column (``parquet.bloom.filter.enabled#<col>``).  Zone maps
-      already skip row groups for the SORT key; the bloom filter is
-      for point lookups on a NON-sort column (e.g. destination_id in a
-      times table sorted by origin) where min/max ranges are wide —
-      the reader drops row groups on a definite bloom miss without
-      touching data pages.  ``bloom_filter_ndv`` sizes the bitset
-      (expected distinct values per row group).
     """
     from pyspark.sql import functions as F
 
@@ -91,11 +81,6 @@ def write_sorted_partitioned(
         writer = writer.option("parquet.compression.codec.zstd.level", str(zstd_level))
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    for col in bloom_filter_cols or []:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-        writer = writer.option(
-            f"parquet.bloom.filter.expected.ndv#{col}", str(bloom_filter_ndv)
-        )
     if partition_by:
         writer = writer.option("partitionOverwriteMode", "dynamic")
         writer = writer.partitionBy(*partition_by)

@@ -53,8 +53,18 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--demo", action="store_true", help="synthesize a tiny world")
     p.add_argument("--max-split-size", type=int, default=5000)
     args = p.parse_args(argv)
-    if args.chunk and not CHUNK_RE.match(args.chunk):
-        p.error(f"--chunk must match o0-o1_d0-d1, got {args.chunk!r}")
+    if args.chunk:
+        m = CHUNK_RE.match(args.chunk)
+        if not m:
+            p.error(f"--chunk must match o0-o1_d0-d1, got {args.chunk!r}")
+        o0, o1, d0, d1 = map(int, m.groups())
+        if o1 <= o0 or d1 <= d0:
+            p.error(
+                f"--chunk ranges must be non-empty (o0 < o1, d0 < d1), "
+                f"got {args.chunk!r}"
+            )
+    if args.max_split_size < 1:
+        p.error(f"--max-split-size must be at least 1, got {args.max_split_size}")
     if not args.demo and not (args.blocks and args.blockpop):
         p.error("pass --demo or both --blocks and --blockpop")
     return args

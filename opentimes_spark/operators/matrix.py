@@ -199,6 +199,10 @@ def travel_time_matrix(
     was exceeded."""
     from opentimes_spark.session import ship_package
 
+    # _route_tile tiles with range(0, n, max_split_size): 0 fails in a
+    # worker and a negative step silently routes no pair.
+    if max_split_size < 1:
+        raise ValueError(f"max_split_size must be at least 1, got {max_split_size}")
     spark = origins.sparkSession
     ship_package(spark)
     # A point with a NULL id or NULL coordinate is malformed, not

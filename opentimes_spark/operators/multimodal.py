@@ -2,28 +2,22 @@
 columns with typed metadata, processed by Arrow-batched pandas UDFs.
 
 The Spark-side plumbing — schema, batch shape, partition sizing, UDF
-signatures — is real and tested, and so are the codecs for every
-format a stdlib+numpy decoder can honestly cover:
+signatures — is real and tested, and so are the stdlib+numpy codecs:
 
 - REAL decode: PPM (P6), 24-bit BMP, PNG (zlib inflate + the five
   spec scanline filters, CRC-checked — full core matrix as of round 9:
   1/2/4/8/16-bit, gray/RGB/palette/gray-alpha/RGBA, Adam7 interlace,
-  PLTE + tRNS), single-frame GIF (full LZW
-  with dictionary growth + 4-pass interlace), baseline JPEG (SOF0:
-  Annex-K Huffman, orthonormal IDCT, 4:2:0/4:2:2/4:4:4 sampling, DRI
-  restart markers — round 7) — each with an encoder partner and
-  byte-level round-trip tests.  Audio payloads and video containers
-  have no native codec; ``frame_sample_plan`` plans video frames from
-  metadata only.
+  PLTE + tRNS) and single-frame GIF (full LZW with dictionary growth +
+  4-pass interlace) — each with an encoder partner and byte-level
+  round-trip tests.  JPEG, audio payloads and video containers have no
+  native codec; ``frame_sample_plan`` plans video frames from metadata
+  only.
 - ``decode_image`` with ``codec="fake"`` runs a deterministic synthetic
   decoder (dimensions + checksum derived from the bytes) for pipeline
   tests that don't care about pixels;
 - ``codec="real"`` auto-detects Pillow per worker process and falls
-  back to the native codecs; only hierarchical and lossless-arithmetic
-  JPEG still raise at the disclosed seam (progressive JPEG landed in
-  round 8; exotic PNGs, 12-bit sequential, and lossless SOF3 in round
-  9; arithmetic SOF9 + progressive SOF10 — the Annex-D QM coder with
-  the F.1.4/G.1.3 statistical models — in round 10).
+  back to the native codecs; any other payload (JPEG included) raises
+  a ``NotImplementedError`` naming Pillow at that seam.
 
 Scale notes: binary payloads dominate row size, so operators here
 (a) never collect payloads to the driver, (b) project metadata-only
@@ -97,13 +91,9 @@ def _fake_decode(payload: bytes) -> tuple[int, int]:
 
 # --- real (pure-numpy) codecs for UNCOMPRESSED formats ---------------------
 # PPM (P6) and 24-bit BMP need no image library — just header parsing and
-# a reshape; baseline PNG adds stdlib zlib + the five spec filters
-# (round 6, full format matrix round 9); baseline JPEG adds Annex-K
-# Huffman + IDCT (round 7); progressive JPEG adds multi-scan spectral-
-# selection / successive-approximation decode (round 8); 12-bit
-# sequential and lossless SOF3 land in round 9; arithmetic SOF9 and
-# SOF10 (Annex-D QM coder) land in round 10.  Only hierarchical and
-# lossless-arithmetic JPEG remain behind the Pillow seam.
+# a reshape; PNG adds stdlib zlib + the five spec filters (round 6, full
+# format matrix round 9) and GIF adds LZW.  Every other format (JPEG
+# included) is behind the Pillow seam.
 
 
 def encode_ppm(img: np.ndarray) -> bytes:
@@ -294,8 +284,7 @@ def decode_png(b: bytes) -> np.ndarray:
     return the looked-up RGB (or RGBA when a tRNS chunk assigns
     per-index alpha); gray/RGB images carrying a tRNS transparent
     color gain an alpha channel (0 where the sample matches).  CRCs
-    are verified per chunk.  This closes the r8 'exotic PNG' seam —
-    the Pillow fallback now covers only JPEG exotica."""
+    are verified per chunk."""
     import struct
 
     if b[:8] != _PNG_SIG:
@@ -499,7 +488,7 @@ def decode_gif(b: bytes) -> np.ndarray:
     Python (full LZW with dictionary growth + the 4-pass interlace
     order).  Extensions (graphics control, comments) are skipped;
     only the FIRST image is decoded.  With PNG this completes the
-    native coverage of the common lossless web formats; JPEG remains
+    native coverage of the common lossless web formats; JPEG is behind
     the Pillow seam."""
     import struct
 
@@ -561,2431 +550,6 @@ def decode_gif(b: bytes) -> np.ndarray:
     raise ValueError("GIF contains no image data")
 
 
-# --- native baseline JPEG (round 7) ----------------------------------------
-# Pure numpy+stdlib JFIF codec: baseline sequential DCT (SOF0/SOF1) AND
-# progressive (SOF2: spectral selection + successive approximation, both
-# directions), standard Annex-K quantization + Huffman tables plus a
-# K.2 optimized-table builder for progressive scans, 4:4:4 / 4:2:0 /
-# 4:2:2 sampling, restart markers.  Closes the web-image codec seam in
-# a Pillow-less container (VERDICT r6 missing #1, r7 missing #1 — web
-# corpora are overwhelmingly JPEG and progressive is a double-digit
-# share).  12-bit extended sequential (16-bit DQT, optimized DHT) and
-# lossless SOF3 (Annex-H predictors, round 9) decode natively too, as
-# do arithmetic SOF9/SOF10 (Annex-D QM coder, round 10); only
-# hierarchical and lossless-arithmetic JPEGs remain behind the Pillow
-# auto-detect seam.
-
-_ZIGZAG = np.array([
-     0,  1,  8, 16,  9,  2,  3, 10, 17, 24, 32, 25, 18, 11,  4,  5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13,  6,  7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-], dtype=np.int32)
-
-_QT_LUMA = np.array([
-    16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99,
-], dtype=np.float64).reshape(8, 8)
-
-_QT_CHROMA = np.array([
-    17, 18, 24, 47, 99, 99, 99, 99, 18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99, 47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-], dtype=np.float64).reshape(8, 8)
-
-# Annex K Huffman tables: (bits[1..16], huffval) per (class, destination)
-_HT_DC_LUMA = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-               list(range(12)))
-_HT_DC_CHROMA = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
-                 list(range(12)))
-_HT_AC_LUMA = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    [0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-     0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-     0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-     0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-     0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-     0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-     0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-     0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-     0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-     0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-     0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-     0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA],
-)
-_HT_AC_CHROMA = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    [0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-     0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-     0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-     0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-     0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-     0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-     0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-     0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-     0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-     0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-     0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-     0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-     0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-     0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA],
-)
-
-
-def _dct_matrix() -> np.ndarray:
-    """Orthonormal 8-point DCT-II basis: DCT = T @ B @ T.T, IDCT =
-    T.T @ C @ T (exact inverse — T is orthogonal)."""
-    k = np.arange(8, dtype=np.float64)
-    t = 0.5 * np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16)
-    t[0] /= np.sqrt(2)
-    return t
-
-
-_DCT_T = _dct_matrix()
-
-
-def _quality_quant(base: np.ndarray, quality: int) -> np.ndarray:
-    """IJG quality scaling: 50 = Annex K verbatim, 100 = all-ones."""
-    q = max(1, min(100, quality))
-    s = 5000 // q if q < 50 else 200 - 2 * q
-    return np.clip(np.floor((base * s + 50) / 100), 1, 255)
-
-
-def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """JPEG canonical Huffman assignment → {symbol: (code, length)}."""
-    out: dict[int, tuple[int, int]] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-def _magnitude_cat(v: int) -> int:
-    return int(v).bit_length() if v >= 0 else int(-v).bit_length()
-
-
-class _BitWriter:
-    """MSB-first bit accumulator with JPEG 0xFF byte stuffing."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def align(self) -> None:
-        if self.nbits:
-            self.put(0x7F, 8 - self.nbits)  # 1-fill pad per spec
-
-    def marker(self, byte: int) -> None:
-        """Emit a raw marker (byte-aligned, never stuffed)."""
-        self.align()
-        self.out += bytes([0xFF, byte])
-
-    def flush(self) -> bytes:
-        self.align()
-        return bytes(self.out)
-
-
-def _jpeg_quantized(
-    img: np.ndarray, quality: int, subsample: bool, precision: int = 8
-) -> tuple:
-    """Shared encode front half: color transform, subsampling, padding,
-    vectorized block DCT, quantization.  Returns
-    ``(gray, h, w, samp, qt_l, qt_c, mcu_rows, mcu_cols, zz)`` where
-    ``zz[ci]`` is an (nby, nbx, 64) int64 array of zigzag-order
-    quantized coefficients for component ``ci``.  ``precision`` 12
-    (extended sequential, uint16 input < 4096) centers the transform
-    at 2048 and scales the Annex-K tables x16 (the libjpeg 12-bit
-    convention), which pushes entries past 255 → 16-bit DQT."""
-    if precision == 8:
-        if img.dtype != np.uint8:
-            raise ValueError("encode_jpeg needs uint8")
-    elif precision == 12:
-        if img.dtype != np.uint16:
-            raise ValueError("12-bit encode needs uint16")
-        if img.size and int(img.max()) >= 4096:
-            raise ValueError("12-bit sample exceeds 4095")
-    else:
-        raise ValueError("precision must be 8 or 12")
-    gray = img.ndim == 2
-    if not gray and (img.ndim != 3 or img.shape[2] != 3):
-        raise ValueError(f"unsupported shape {img.shape}")
-    h, w = img.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("empty image")
-
-    qt_l = _quality_quant(_QT_LUMA, quality)
-    qt_c = _quality_quant(_QT_CHROMA, quality)
-    if precision == 12:
-        qt_l = np.clip(qt_l * 16.0, 1, 65535)
-        qt_c = np.clip(qt_c * 16.0, 1, 65535)
-    half = float(1 << (precision - 1))
-    if gray:
-        planes = [img.astype(np.float64)]
-        samp = [(1, 1)]
-        qts = [qt_l]
-    else:
-        rgb = img.astype(np.float64)
-        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + half
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + half
-        if subsample:  # 2x2 box mean → 4:2:0
-            ph = (h + 1) // 2 * 2
-            pw = (w + 1) // 2 * 2
-            def _box2(p):
-                pp = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-                return pp.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            planes = [y, _box2(cb), _box2(cr)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [y, cb, cr]
-            samp = [(1, 1), (1, 1), (1, 1)]
-        qts = [qt_l, qt_c, qt_c]
-
-    max_h = max(s[0] for s in samp)
-    max_v = max(s[1] for s in samp)
-    mcu_cols = -(-w // (8 * max_h))
-    mcu_rows = -(-h // (8 * max_v))
-
-    zz = []
-    for plane, (sh, sv), qt in zip(planes, samp, qts):
-        th, tw = mcu_rows * sv * 8, mcu_cols * sh * 8
-        ph, pw = plane.shape
-        p = np.pad(plane, ((0, th - ph), (0, tw - pw)), mode="edge") - half
-        nby, nbx = th // 8, tw // 8
-        blocks = p.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("ki,abij,lj->abkl", _DCT_T, blocks, _DCT_T)
-        q = np.round(coef / qt).astype(np.int64)
-        zz.append(q.reshape(nby, nbx, 64)[..., _ZIGZAG])
-    return gray, h, w, samp, qt_l, qt_c, mcu_rows, mcu_cols, zz
-
-
-def encode_jpeg(
-    img: np.ndarray,
-    quality: int = 90,
-    subsample: bool = True,
-    restart_interval: int = 0,
-    precision: int = 8,
-) -> bytes:
-    """uint8 grayscale (HxW) or RGB (HxWx3) → baseline JFIF JPEG
-    (SOF0, Annex-K tables scaled by ``quality``, 4:2:0 chroma when
-    ``subsample`` else 4:4:4).  The lossy round-trip partner of
-    ``decode_jpeg`` — correctness-first pure numpy+stdlib, used to
-    property-test the decoder without Pillow.  ``precision=12`` takes
-    uint16 input (< 4096), emits extended sequential (SOF1) with
-    16-bit quantization tables and K.2-optimized Huffman tables — the
-    standard Annex-K tables only reach the 8-bit coefficient
-    categories, so 12-bit streams always carry custom DHTs."""
-    import struct
-
-    gray, h, w, samp, qt_l, qt_c, mcu_rows, mcu_cols, zzs = (
-        _jpeg_quantized(img, quality, subsample, precision)
-    )
-
-    cls_of = [0] + ([] if gray else [1, 1])
-    if precision == 8:
-        dht_tables = [
-            (0, 0, _HT_DC_LUMA), (1, 0, _HT_AC_LUMA),
-        ] + ([] if gray else [
-            (0, 1, _HT_DC_CHROMA), (1, 1, _HT_AC_CHROMA),
-        ])
-    else:
-        # Two-pass: count symbols per table class, build K.2 tables.
-        fc_dc = [_FreqCounter(), _FreqCounter()]
-        fc_ac = [_FreqCounter(), _FreqCounter()]
-        _seq_scan_pass(
-            zzs, samp, mcu_rows, mcu_cols, restart_interval,
-            [fc_dc[c] for c in cls_of], [fc_ac[c] for c in cls_of],
-        )
-        dht_tables = []
-        for cls, fcs in ((0, fc_dc), (1, fc_ac)):
-            for dest in range(1 if gray else 2):
-                if fcs[dest].freq:
-                    dht_tables.append(
-                        (cls, dest, _build_huffman(fcs[dest].freq))
-                    )
-    codes = {
-        (cls, dest): _canonical_codes(*bv) for cls, dest, bv in dht_tables
-    }
-    dc_tbls = [codes[(0, c)] for c in cls_of]
-    ac_tbls = [codes[(1, c)] for c in cls_of]
-
-    bw = _BitWriter()
-    _seq_scan_pass(
-        zzs, samp, mcu_rows, mcu_cols, restart_interval,
-        [_HuffEmitter(bw, t) for t in dc_tbls],
-        [_HuffEmitter(bw, t) for t in ac_tbls],
-    )
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    def dqt(tq: int, qt: np.ndarray) -> bytes:
-        if precision == 8:
-            return seg(
-                0xFFDB, bytes([tq]) + bytes(qt.astype(np.uint8).ravel()[_ZIGZAG])
-            )
-        return seg(  # Pq=1: 16-bit big-endian entries
-            0xFFDB,
-            bytes([0x10 | tq]) + qt.astype(">u2").ravel()[_ZIGZAG].tobytes(),
-        )
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += dqt(0, qt_l)
-    if not gray:
-        out += dqt(1, qt_c)
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", precision, h, w, ncomp)
-    for ci in range(ncomp):
-        sh, sv = samp[ci]
-        sof += struct.pack(">BBB", ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1)
-    out += seg(0xFFC0 if precision == 8 else 0xFFC1, sof)
-
-    for cls, dest, (tbits, tvals) in dht_tables:
-        out += seg(
-            0xFFC4, bytes([(cls << 4) | dest] + list(tbits) + list(tvals))
-        )
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        td_ta = 0 if ci == 0 else 0x11
-        sos += bytes([ci + 1, td_ta])
-    sos += b"\x00\x3f\x00"
-    out += seg(0xFFDA, sos)
-    out += scan
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def _build_huffman(freq: dict[int, int]) -> tuple[list[int], list[int]]:
-    """JPEG length-limited Huffman table from symbol frequencies: the
-    ITU T.81 Annex K.2 procedure (code-size computation via FREQ/OTHERS
-    chains, BITS counting, 16-bit adjustment, all-ones codeword
-    reserved through the 256 dummy symbol).  Needed for progressive
-    scans: the Annex-K *standard* AC tables lack the EOBn (run>0)
-    symbols that progressive EOB runs require, so each scan carries an
-    optimized table — the libjpeg -optimize behavior."""
-    freqs = [0] * 257
-    for s, c in freq.items():
-        if c:
-            freqs[s] = int(c)
-    freqs[256] = 1  # dummy: reserves the all-ones code
-    codesize = [0] * 257
-    others = [-1] * 257
-    while True:
-        c1, v = -1, None
-        for i in range(257):
-            if freqs[i] and (v is None or freqs[i] <= v):
-                v, c1 = freqs[i], i
-        c2, v = -1, None
-        for i in range(257):
-            if freqs[i] and i != c1 and (v is None or freqs[i] <= v):
-                v, c2 = freqs[i], i
-        if c2 < 0:
-            break
-        freqs[c1] += freqs[c2]
-        freqs[c2] = 0
-        codesize[c1] += 1
-        while others[c1] >= 0:
-            c1 = others[c1]
-            codesize[c1] += 1
-        others[c1] = c2
-        codesize[c2] += 1
-        while others[c2] >= 0:
-            c2 = others[c2]
-            codesize[c2] += 1
-    bits = [0] * 33
-    for i in range(257):
-        if codesize[i]:
-            if codesize[i] > 32:
-                raise ValueError("JPEG: Huffman code length overflow")
-            bits[codesize[i]] += 1
-    i = 32
-    while i > 16:  # Adjust_BITS (K.2 figure K.3)
-        while bits[i] > 0:
-            j = i - 2
-            while bits[j] == 0:
-                j -= 1
-            bits[i] -= 2
-            bits[i - 1] += 1
-            bits[j + 1] += 2
-            bits[j] -= 1
-        i -= 1
-    while i and bits[i] == 0:
-        i -= 1
-    bits[i] -= 1  # drop the dummy symbol's code
-    vals = sorted(
-        (s for s in range(256) if codesize[s]),
-        key=lambda s: (codesize[s], s),
-    )
-    return bits[1:17], vals
-
-
-class _FreqCounter:
-    """Gather-pass emitter: counts Huffman symbols, discards raw bits."""
-
-    def __init__(self) -> None:
-        self.freq: dict[int, int] = {}
-
-    def sym(self, s: int) -> None:
-        self.freq[s] = self.freq.get(s, 0) + 1
-
-    def bits(self, v: int, n: int) -> None:
-        pass
-
-    def marker(self, byte: int) -> None:
-        pass
-
-
-class _HuffEmitter:
-    """Emission-pass emitter: Huffman symbols + raw bits → _BitWriter."""
-
-    def __init__(self, bw: _BitWriter, table: dict) -> None:
-        self.bw = bw
-        self.table = table
-
-    def sym(self, s: int) -> None:
-        code, length = self.table[s]
-        self.bw.put(code, length)
-
-    def bits(self, v: int, n: int) -> None:
-        if n:
-            self.bw.put(v, n)
-
-    def marker(self, byte: int) -> None:
-        self.bw.marker(byte)
-
-
-def _seq_scan_pass(
-    zzs: list,
-    samp: list,
-    mcu_rows: int,
-    mcu_cols: int,
-    restart_interval: int,
-    dc_em: list,
-    ac_em: list,
-) -> None:
-    """One sequential (SOF0/SOF1) entropy scan over quantized zigzag
-    blocks, symbol-by-symbol through per-component emitters — run twice
-    with ``_FreqCounter`` then ``_HuffEmitter`` for optimized-table
-    encodes (the K.2 two-pass shape), once with ``_HuffEmitter`` over
-    the Annex-K tables for the plain baseline path."""
-    pred = [0] * len(samp)
-    n_rst = 0
-    for my in range(mcu_rows):
-        for mx in range(mcu_cols):
-            mcu = my * mcu_cols + mx
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                dc_em[0].marker(0xD0 + (n_rst & 7))
-                n_rst += 1
-                pred = [0] * len(samp)
-            for ci, (sh, sv) in enumerate(samp):
-                for by in range(sv):
-                    for bx in range(sh):
-                        zz = zzs[ci][my * sv + by, mx * sh + bx]
-                        # DC difference
-                        diff = int(zz[0]) - pred[ci]
-                        pred[ci] = int(zz[0])
-                        cat = _magnitude_cat(diff)
-                        dc_em[ci].sym(cat)
-                        if cat:
-                            v = diff if diff >= 0 else diff + (1 << cat) - 1
-                            dc_em[ci].bits(v, cat)
-                        # AC run-length
-                        run = 0
-                        for k in range(1, 64):
-                            v = int(zz[k])
-                            if v == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                ac_em[ci].sym(0xF0)  # ZRL
-                                run -= 16
-                            cat = _magnitude_cat(v)
-                            ac_em[ci].sym(run * 16 + cat)
-                            ac_em[ci].bits(
-                                v if v >= 0 else v + (1 << cat) - 1, cat
-                            )
-                            run = 0
-                        if run:
-                            ac_em[ci].sym(0x00)  # EOB
-
-
-class _ProgScanState:
-    """Per-scan encoder state: EOB run + buffered correction bits."""
-
-    __slots__ = ("eobrun", "pending", "pred")
-
-    def __init__(self, ncomp: int) -> None:
-        self.eobrun = 0
-        self.pending: list[int] = []
-        self.pred = [0] * ncomp
-
-
-def _flush_eobrun(st: _ProgScanState, em) -> None:
-    """Emit the pending EOBn symbol + appended bits + buffered
-    correction bits (libjpeg emit_eobrun)."""
-    if st.eobrun > 0:
-        nbits = st.eobrun.bit_length() - 1
-        em.sym(nbits << 4)
-        if nbits:
-            em.bits(st.eobrun & ((1 << nbits) - 1), nbits)
-        st.eobrun = 0
-        for bit in st.pending:
-            em.bits(bit, 1)
-        st.pending = []
-
-
-def _enc_dc_prog(blk, ci, ah, al, st, em) -> None:
-    if ah == 0:  # first scan: Huffman-coded diffs of (DC >> al)
-        t = int(blk[0]) >> al  # arithmetic shift per G.1.2.1
-        diff = t - st.pred[ci]
-        st.pred[ci] = t
-        cat = _magnitude_cat(diff)
-        em.sym(cat)
-        if cat:
-            em.bits(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-    else:  # refinement: one raw bit
-        em.bits((int(blk[0]) >> al) & 1, 1)
-
-
-def _enc_ac_first_prog(blk, ss, se, al, st, em) -> None:
-    """AC first scan for one block (libjpeg encode_mcu_AC_first):
-    sign-magnitude point transform, ZRL runs, lazy EOB runs."""
-    r = 0
-    for k in range(ss, se + 1):
-        v = int(blk[k])
-        t = abs(v) >> al
-        if t == 0:
-            r += 1
-            continue
-        if v < 0:
-            t = -t
-        _flush_eobrun(st, em)
-        while r > 15:
-            em.sym(0xF0)
-            r -= 16
-        cat = _magnitude_cat(t)
-        em.sym((r << 4) | cat)
-        em.bits(t if t >= 0 else t + (1 << cat) - 1, cat)
-        r = 0
-    if r > 0:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            _flush_eobrun(st, em)
-
-
-def _enc_ac_refine_prog(blk, ss, se, al, st, em) -> None:
-    """AC refinement scan for one block (libjpeg
-    encode_mcu_AC_refine): newly-significant coefficients as
-    (run,1)+sign, correction bits buffered and flushed with their
-    primitive or carried into the EOB run."""
-    absv = []
-    eobpos = ss - 1
-    for k in range(ss, se + 1):
-        t = abs(int(blk[k])) >> al
-        absv.append(t)
-        if t == 1:
-            eobpos = k
-    br_bits: list[int] = []
-    r = 0
-    for k in range(ss, se + 1):
-        t = absv[k - ss]
-        if t == 0:
-            r += 1
-            continue
-        while r > 15 and k <= eobpos:
-            _flush_eobrun(st, em)
-            em.sym(0xF0)
-            r -= 16
-            for bit in br_bits:
-                em.bits(bit, 1)
-            br_bits = []
-        if t > 1:  # history-nonzero: buffer its correction bit
-            br_bits.append(t & 1)
-            continue
-        # newly significant (magnitude becomes 1 at this precision)
-        _flush_eobrun(st, em)
-        em.sym((r << 4) | 1)
-        em.bits(0 if int(blk[k]) < 0 else 1, 1)
-        for bit in br_bits:
-            em.bits(bit, 1)
-        br_bits = []
-        r = 0
-    if r > 0 or br_bits:
-        st.eobrun += 1
-        st.pending.extend(br_bits)
-        # MAX_CORR_BITS bound: flush before the buffer can grow past
-        # what one restart interval/scan can hold
-        if st.eobrun == 0x7FFF or len(st.pending) > 937:
-            _flush_eobrun(st, em)
-
-
-def _prog_scan_pass(
-    zzs, samp, mcu_rows, mcu_cols, h, w,
-    comp_idx, ss, se, ah, al, em, restart_interval,
-) -> None:
-    """Drive one progressive scan over the coefficient store, emitting
-    through ``em`` (a _FreqCounter for the gather pass, a _HuffEmitter
-    for the output pass — identical control flow, so the gathered
-    frequencies exactly match the emitted symbol stream)."""
-    max_h = max(s[0] for s in samp)
-    max_v = max(s[1] for s in samp)
-    st = _ProgScanState(len(samp))
-    interleaved = len(comp_idx) > 1
-    if interleaved:
-        n_units = mcu_rows * mcu_cols
-    else:
-        ci = comp_idx[0]
-        sh, sv = samp[ci]
-        nbx_u = -(-(-(-(w * sh) // max_h)) // 8)
-        nby_u = -(-(-(-(h * sv) // max_v)) // 8)
-        n_units = nbx_u * nby_u
-    n_rst = 0
-    for unit in range(n_units):
-        if restart_interval and unit and unit % restart_interval == 0:
-            _flush_eobrun(st, em)
-            em.marker(0xD0 + (n_rst & 7))
-            n_rst += 1
-            st.pred = [0] * len(samp)
-        if interleaved:
-            my, mx = divmod(unit, mcu_cols)
-            for ci in comp_idx:
-                sh, sv = samp[ci]
-                for by in range(sv):
-                    for bx in range(sh):
-                        blk = zzs[ci][my * sv + by, mx * sh + bx]
-                        _enc_dc_prog(blk, ci, ah, al, st, em)
-        else:
-            by, bx = divmod(unit, nbx_u)
-            blk = zzs[ci][by, bx]
-            if ss == 0:
-                _enc_dc_prog(blk, ci, ah, al, st, em)
-            elif ah == 0:
-                _enc_ac_first_prog(blk, ss, se, al, st, em)
-            else:
-                _enc_ac_refine_prog(blk, ss, se, al, st, em)
-    _flush_eobrun(st, em)
-
-
-def _default_prog_scans(ncomp: int) -> list[tuple]:
-    """libjpeg's jpeg_simple_progression script:
-    (comp_indices, Ss, Se, Ah, Al) per scan."""
-    if ncomp == 1:
-        return [
-            ([0], 0, 0, 0, 1),
-            ([0], 1, 5, 0, 2),
-            ([0], 6, 63, 0, 2),
-            ([0], 1, 63, 2, 1),
-            ([0], 0, 0, 1, 0),
-            ([0], 1, 63, 1, 0),
-        ]
-    return [
-        ([0, 1, 2], 0, 0, 0, 1),
-        ([0], 1, 5, 0, 2),
-        ([2], 1, 63, 0, 1),
-        ([1], 1, 63, 0, 1),
-        ([0], 6, 63, 0, 2),
-        ([0], 1, 63, 2, 1),
-        ([0, 1, 2], 0, 0, 1, 0),
-        ([2], 1, 63, 1, 0),
-        ([1], 1, 63, 1, 0),
-        ([0], 1, 63, 1, 0),
-    ]
-
-
-def encode_jpeg_progressive(
-    img: np.ndarray,
-    quality: int = 90,
-    subsample: bool = True,
-    restart_interval: int = 0,
-    scans: list[tuple] | None = None,
-) -> bytes:
-    """uint8 grayscale (HxW) or RGB (HxWx3) → PROGRESSIVE JFIF JPEG
-    (SOF2): spectral selection + successive approximation per the
-    libjpeg default scan script (or a caller-supplied one), with
-    per-scan optimized Huffman tables (two-pass gather/emit — the
-    standard Annex-K tables lack the EOBn symbols progressive EOB runs
-    need).  Quantized coefficients are IDENTICAL to ``encode_jpeg`` at
-    the same (quality, subsample), so a correct progressive decode
-    must reproduce the baseline decode bit-for-bit — the property the
-    round-trip tests pin."""
-    import struct
-
-    gray, h, w, samp, qt_l, qt_c, mcu_rows, mcu_cols, zzs = (
-        _jpeg_quantized(img, quality, subsample)
-    )
-    ncomp = 1 if gray else 3
-    script = scans if scans is not None else _default_prog_scans(ncomp)
-    for comp_idx, ss, _se, _ah, _al in script:
-        # T.81 G.1.1.1.1: AC scans (Ss > 0) are single-component only —
-        # an interleaved AC scan would otherwise fall into the DC
-        # branch of _prog_scan_pass and emit a silently corrupt stream.
-        if len(comp_idx) > 1 and ss != 0:
-            raise ValueError(
-                f"illegal progressive scan {comp_idx} Ss={ss}: AC scans "
-                "must be single-component (T.81 G.1.1.1.1)"
-            )
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, b"\x00" + bytes(qt_l.astype(np.uint8).ravel()[_ZIGZAG]))
-    if not gray:
-        out += seg(
-            0xFFDB, b"\x01" + bytes(qt_c.astype(np.uint8).ravel()[_ZIGZAG])
-        )
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sh, sv = samp[ci]
-        sof += struct.pack(">BBB", ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1)
-    out += seg(0xFFC2, sof)
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-
-    for comp_idx, ss, se, ah, al in script:
-        # pass 1: symbol frequencies (control flow identical to emit)
-        fc = _FreqCounter()
-        _prog_scan_pass(
-            zzs, samp, mcu_rows, mcu_cols, h, w,
-            comp_idx, ss, se, ah, al, fc, restart_interval,
-        )
-        cls = 0 if ss == 0 else 1
-        if fc.freq:
-            bits, vals = _build_huffman(fc.freq)
-            out += seg(0xFFC4, bytes([cls << 4]) + bytes(bits) + bytes(vals))
-            table = _canonical_codes(bits, vals)
-        else:  # refinement-only scan: raw bits, no Huffman symbols
-            table = {}
-        sos = bytes([len(comp_idx)])
-        for ci in comp_idx:
-            sos += bytes([ci + 1, 0x00])  # td=0 / ta=0 (retransmitted)
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xFFDA, sos)
-        bw = _BitWriter()
-        _prog_scan_pass(
-            zzs, samp, mcu_rows, mcu_cols, h, w,
-            comp_idx, ss, se, ah, al, _HuffEmitter(bw, table),
-            restart_interval,
-        )
-        out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _ll_predict(
-    plane: np.ndarray,
-    row: int,
-    col: int,
-    predictor: int,
-    default: int,
-    anchor: tuple[int, int],
-) -> int:
-    """Prediction value for the lossless sample at (row, col) per ITU
-    T.81 H.2: ``anchor`` is the position of the first sample of the
-    current restart interval (scan start when DRI=0).  That sample
-    takes the default ``2^(P-Pt-1)``; the remainder of its line uses
-    the 1-D horizontal predictor Ra; every later line starts on Rb and
-    applies the selected predictor 1-7 elsewhere.  Shared verbatim by
-    encoder and decoder so the round-trip is exact by construction."""
-    ar, ac = anchor
-    if row == ar:
-        if col == ac:
-            return default
-        return int(plane[row, col - 1])  # Ra
-    if col == 0:
-        return int(plane[row - 1, col])  # Rb
-    a = int(plane[row, col - 1])
-    b = int(plane[row - 1, col])
-    c = int(plane[row - 1, col - 1])
-    if predictor == 1:
-        return a
-    if predictor == 2:
-        return b
-    if predictor == 3:
-        return c
-    if predictor == 4:
-        return a + b - c
-    if predictor == 5:
-        return a + ((b - c) >> 1)
-    if predictor == 6:
-        return b + ((a - c) >> 1)
-    if predictor == 7:
-        return (a + b) >> 1
-    raise ValueError(f"lossless predictor {predictor} out of range")
-
-
-def _ll_scan_pass(
-    samples: list[np.ndarray],
-    predictor: int,
-    pt: int,
-    precision: int,
-    restart_interval: int,
-    em,
-) -> None:
-    """Lossless entropy scan (encode side): row-major sample walk,
-    components interleaved per MCU, differences coded as SSSS category
-    + magnitude bits from the DC-table alphabet (SSSS=16 ≡ diff 32768,
-    no appended bits; all arithmetic mod 2^16 per H.1.2.1)."""
-    nc = len(samples)
-    h, w = samples[0].shape
-    default = 1 << (precision - pt - 1)
-    anchor = (0, 0)
-    n_rst = 0
-    for row in range(h):
-        for col in range(w):
-            mcu = row * w + col
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                em.marker(0xD0 + (n_rst & 7))
-                n_rst += 1
-                anchor = (row, col)
-            for ci in range(nc):
-                x = int(samples[ci][row, col])
-                p = _ll_predict(
-                    samples[ci], row, col, predictor, default, anchor
-                )
-                d = (x - p) & 0xFFFF
-                if d >= 32768:
-                    d -= 65536
-                if d == -32768:
-                    em.sym(16)
-                    continue
-                cat = _magnitude_cat(d)
-                em.sym(cat)
-                if cat:
-                    em.bits(d if d >= 0 else d + (1 << cat) - 1, cat)
-
-
-def encode_jpeg_lossless(
-    img: np.ndarray,
-    predictor: int = 4,
-    point_transform: int = 0,
-    precision: int | None = None,
-    restart_interval: int = 0,
-) -> bytes:
-    """uint8/uint16 grayscale (HxW) or multi-channel (HxWxC, C<=4) →
-    lossless JPEG (SOF3, ITU T.81 Annex H): predictive coding with
-    selector 1-7, point transform ``Al``, optimized (K.2) Huffman table
-    over the difference categories, components interleaved one sample
-    per MCU.  No color transform and no quantization — ``decode_jpeg``
-    reproduces the (point-transform-shifted) input bit-for-bit, which
-    is the round-trip property the tests pin.  ``precision`` defaults
-    to 8 for uint8 and 16 for uint16 input."""
-    import struct
-
-    if img.ndim == 2:
-        chans = [img]
-    elif img.ndim == 3 and 1 <= img.shape[2] <= 4:
-        chans = [img[..., i] for i in range(img.shape[2])]
-    else:
-        raise ValueError(f"unsupported shape {img.shape}")
-    if img.dtype == np.uint8:
-        prec = 8 if precision is None else precision
-    elif img.dtype == np.uint16:
-        prec = 16 if precision is None else precision
-    else:
-        raise ValueError("encode_jpeg_lossless needs uint8 or uint16")
-    if not 2 <= prec <= 16:
-        raise ValueError("lossless precision must be in 2..16")
-    if not 1 <= predictor <= 7:
-        raise ValueError("lossless predictor must be in 1..7")
-    if not 0 <= point_transform < prec:
-        raise ValueError("point transform must be in 0..precision-1")
-    if int(max(int(c.max()) for c in chans if c.size)) >= (1 << prec):
-        raise ValueError("sample exceeds declared precision")
-    h, w = chans[0].shape
-    if h == 0 or w == 0:
-        raise ValueError("empty image")
-    samples = [
-        (c.astype(np.int32) >> point_transform) for c in chans
-    ]
-
-    fc = _FreqCounter()
-    _ll_scan_pass(
-        samples, predictor, point_transform, prec, restart_interval, fc
-    )
-    bits, vals = _build_huffman(fc.freq)
-    table = _canonical_codes(bits, vals)
-    bw = _BitWriter()
-    _ll_scan_pass(
-        samples, predictor, point_transform, prec, restart_interval,
-        _HuffEmitter(bw, table),
-    )
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", prec, h, w, len(samples))
-    for ci in range(len(samples)):
-        sof += struct.pack(">BBB", ci + 1, 0x11, 0)  # 1x1, Tq unused
-    out += seg(0xFFC3, sof)
-    out += seg(0xFFC4, bytes([0x00]) + bytes(bits) + bytes(vals))
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-    sos = bytes([len(samples)])
-    for ci in range(len(samples)):
-        sos += bytes([ci + 1, 0x00])  # td=0 (ta unused)
-    sos += bytes([predictor, 0, point_transform])  # Ss=sel, Se=0, Al=Pt
-    out += seg(0xFFDA, sos)
-    out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _decode_lossless_scan(
-    b: bytes,
-    pos: int,
-    sc: list[tuple[int, int, int]],
-    predictor: int,
-    pt: int,
-    huff: dict,
-    planes: dict[int, np.ndarray],
-    precision: int,
-    restart: int,
-) -> None:
-    """Decode one lossless (SOF3) scan into the per-component int32
-    sample planes — the inverse walk of ``_ll_scan_pass``, using the
-    same ``_ll_predict`` so reconstruction is exact by construction.
-    Values stay point-transform-shifted here; the caller re-shifts."""
-    h, w = next(iter(planes.values())).shape
-    default = 1 << (precision - pt - 1)
-    tables = [huff[(0, td)] for _, td, _ in sc]
-    comp_planes = [planes[cid] for cid, _, _ in sc]
-    br = _JpegBitReader(b, pos)
-    anchor = (0, 0)
-    n_rst = 0
-    for row in range(h):
-        for col in range(w):
-            mcu = row * w + col
-            if restart and mcu and mcu % restart == 0:
-                br.align_and_expect_rst(n_rst)
-                n_rst = (n_rst + 1) & 7
-                anchor = (row, col)
-            for plane, tbl in zip(comp_planes, tables):
-                cat = _read_huff(br, tbl)
-                if cat == 16:
-                    diff = 32768
-                elif cat:
-                    diff = _extend(br.bits(cat), cat)
-                else:
-                    diff = 0
-                p = _ll_predict(plane, row, col, predictor, default, anchor)
-                plane[row, col] = (p + diff) & 0xFFFF
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over entropy-coded data: un-stuffs 0xFF00,
-    stops at any real marker (RSTn handled by the MCU loop)."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        if self.pos >= len(self.data):
-            raise ValueError("JPEG: truncated entropy stream")
-        byte = self.data[self.pos]
-        if byte == 0xFF:
-            nxt = self.data[self.pos + 1] if self.pos + 1 < len(self.data) else None
-            if nxt == 0x00:
-                self.pos += 2
-            else:
-                raise ValueError("JPEG: marker inside entropy stream")
-        else:
-            self.pos += 1
-        self.acc = (self.acc << 8) | byte
-        self.nbits += 8
-
-    def bits(self, n: int) -> int:
-        while self.nbits < n:
-            self._fill()
-        v = (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        self.nbits -= n
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def align_and_expect_rst(self, n: int) -> None:
-        """Byte-align and consume the expected RSTn marker."""
-        self.acc = 0
-        self.nbits = 0
-        if (
-            self.pos + 1 >= len(self.data)
-            or self.data[self.pos] != 0xFF
-            or self.data[self.pos + 1] != 0xD0 + (n & 7)
-        ):
-            raise ValueError("JPEG: expected restart marker")
-        self.pos += 2
-
-
-def _huff_decoder(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """{(length, code): symbol} for bit-serial canonical decode."""
-    table: dict[tuple[int, int], int] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _read_huff(br: _JpegBitReader, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.bits(1)
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("JPEG: invalid Huffman code")
-
-
-def _extend(v: int, cat: int) -> int:
-    return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
-
-
-def _jpeg_entropy_end(b: bytes, pos: int) -> int:
-    """Index of the next real (non-RST, non-stuffed) marker at/after
-    ``pos`` — the end of an entropy-coded segment.  Skips 0xFF00 byte
-    stuffing, RSTn markers, and 0xFF fill bytes."""
-    i, n = pos, len(b)
-    while i < n:
-        if b[i] != 0xFF:
-            i += 1
-            continue
-        if i + 1 >= n:
-            return n
-        nxt = b[i + 1]
-        if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-            i += 2
-        elif nxt == 0xFF:
-            i += 1
-        else:
-            return i
-    return n
-
-
-def _decode_prog_block(
-    br: _JpegBitReader,
-    blk: np.ndarray,
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    dc_t,
-    ac_t,
-    pred: dict[int, int],
-    cid: int,
-    eobrun: int,
-) -> int:
-    """Decode ONE block's contribution for one progressive scan (T.81
-    §G.2; the four libjpeg decode_mcu_{DC,AC}_{first,refine} cases).
-    ``blk`` is the 64-long zigzag-order coefficient view (mutated);
-    returns the updated EOB-run counter."""
-    if ss == 0:  # DC scan
-        if ah == 0:
-            if dc_t is None:
-                raise ValueError("JPEG: missing DC Huffman table")
-            cat = _read_huff(br, dc_t)
-            diff = _extend(br.bits(cat), cat) if cat else 0
-            pred[cid] += diff
-            blk[0] = pred[cid] << al
-        else:  # DC refinement: one raw bit at position al
-            if br.bits(1):
-                blk[0] = int(blk[0]) | (1 << al)
-        return eobrun
-    if ah == 0:  # AC first scan (band ss..se at shift al)
-        if eobrun > 0:
-            return eobrun - 1
-        if ac_t is None:
-            raise ValueError("JPEG: missing AC Huffman table")
-        k = ss
-        while k <= se:
-            sym = _read_huff(br, ac_t)
-            run, size = sym >> 4, sym & 0xF
-            if size == 0:
-                if run < 15:  # EOBn: run length 2^run + appended bits
-                    eobrun = (1 << run) - 1  # this block is a member
-                    if run:
-                        eobrun += br.bits(run)
-                    break
-                k += 16  # ZRL
-            else:
-                k += run
-                if k > se:
-                    raise ValueError("JPEG: AC index overflow")
-                blk[k] = _extend(br.bits(size), size) << al
-                k += 1
-        return eobrun
-    # AC refinement scan: correction bits + newly-significant coeffs
-    if ac_t is None:
-        raise ValueError("JPEG: missing AC Huffman table")
-    p1 = 1 << al
-    m1 = -p1
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            sym = _read_huff(br, ac_t)
-            run, size = sym >> 4, sym & 0xF
-            val = 0
-            if size == 0:
-                if run < 15:
-                    eobrun = 1 << run  # current block handled below
-                    if run:
-                        eobrun += br.bits(run)
-                    break
-                # run == 15: ZRL — skip 16 zero-history positions
-            elif size == 1:
-                val = p1 if br.bits(1) else m1
-            else:
-                raise ValueError("JPEG: bad refinement magnitude")
-            while k <= se:
-                if blk[k] != 0:
-                    if br.bits(1) and (int(blk[k]) & p1) == 0:
-                        blk[k] = int(blk[k]) + (p1 if blk[k] >= 0 else m1)
-                else:
-                    if run == 0:
-                        break
-                    run -= 1
-                k += 1
-            if val and k <= se:
-                blk[k] = val
-            k += 1
-    if eobrun > 0:
-        # end-of-band: correction bits for remaining nonzero history
-        while k <= se:
-            if blk[k] != 0:
-                if br.bits(1) and (int(blk[k]) & p1) == 0:
-                    blk[k] = int(blk[k]) + (p1 if blk[k] >= 0 else m1)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _decode_progressive_scan(
-    b: bytes,
-    pos: int,
-    scan_comps: list[tuple[int, int, int]],
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    huff: dict,
-    coefs: dict[int, np.ndarray],
-    byid: dict[int, tuple[int, int, int]],
-    max_h: int,
-    max_v: int,
-    mcu_rows: int,
-    mcu_cols: int,
-    w: int,
-    h: int,
-    restart: int,
-) -> None:
-    """One SOS's entropy data into the coefficient store.  DC scans may
-    be interleaved (MCU order); AC scans are single-component in block
-    raster order over the component's USED blocks (T.81 A.2.2).
-    Restart intervals reset the DC predictors, the EOB run, and bit
-    alignment — same contract as the baseline loop."""
-    ns = len(scan_comps)
-    if ss == 0 and se != 0:
-        raise ValueError("JPEG: DC scan with nonzero Se")
-    if ss > se or se > 63 or al > 13 or (ah and ah != al + 1):
-        raise ValueError("JPEG: bad progression parameters")
-    if ss > 0 and ns != 1:
-        raise ValueError("JPEG: progressive AC scan must be 1-component")
-    br = _JpegBitReader(b, pos)
-    pred = {cid: 0 for cid, _, _ in scan_comps}
-    eobrun = 0
-    if ns == 1:
-        cid, td, ta = scan_comps[0]
-        sh, sv, _ = byid[cid]
-        nbx_u = -(-(-(-(w * sh) // max_h)) // 8)
-        nby_u = -(-(-(-(h * sv) // max_v)) // 8)
-        n_units = nbx_u * nby_u
-    else:
-        n_units = mcu_rows * mcu_cols
-    n_rst = 0
-    for unit in range(n_units):
-        if restart and unit and unit % restart == 0:
-            br.align_and_expect_rst(n_rst)
-            n_rst = (n_rst + 1) & 7
-            pred = dict.fromkeys(pred, 0)
-            eobrun = 0
-        if ns == 1:
-            by, bx = divmod(unit, nbx_u)
-            eobrun = _decode_prog_block(
-                br, coefs[cid][by, bx], ss, se, ah, al,
-                huff.get((0, td)), huff.get((1, ta)), pred, cid, eobrun,
-            )
-        else:
-            my, mx = divmod(unit, mcu_cols)
-            for cid2, td2, ta2 in scan_comps:
-                sh2, sv2, _ = byid[cid2]
-                for by2 in range(sv2):
-                    for bx2 in range(sh2):
-                        eobrun = _decode_prog_block(
-                            br,
-                            coefs[cid2][my * sv2 + by2, mx * sh2 + bx2],
-                            ss, se, ah, al,
-                            huff.get((0, td2)), huff.get((1, ta2)),
-                            pred, cid2, eobrun,
-                        )
-
-
-# --- JPEG arithmetic entropy coding (SOF9, ITU T.81 Annexes D/F) -----------
-# The QM coder: a multiplication-free binary arithmetic coder with a
-# 113-state probability estimation machine (Table D.3) plus the
-# fixed-probability state 113 used for AC sign decisions.  Encoder and
-# decoder below follow the Annex D/F flowcharts with the byte-oriented
-# register discipline (16-bit A interval renormalized to >= 0x8000,
-# conditional MPS/LPS exchange, carry resolution over stacked 0xFF
-# bytes) and the B.1.1.5 convention that any 0xFF entropy byte is
-# followed by a stuffed 0x00.  The DC/AC statistical models are the
-# F.1.4 decision trees (diff-class conditioned DC contexts, 3-per-k AC
-# EOB/zero/magnitude contexts, Kx low/high spectral split).
-
-# Table D.3 rows: (Qe, Next_Index_LPS, Next_Index_MPS, Switch_MPS) —
-# the column order of the standard's table: an LPS moves toward the
-# less-skewed states (larger Qe), an MPS toward the more-skewed ones.
-_QM_ROWS = [
-    (0x5A1D, 1, 1, 1), (0x2586, 14, 2, 0), (0x1114, 16, 3, 0),
-    (0x080B, 18, 4, 0), (0x03D8, 20, 5, 0), (0x01DA, 23, 6, 0),
-    (0x00E5, 25, 7, 0), (0x006F, 28, 8, 0), (0x0036, 30, 9, 0),
-    (0x001A, 33, 10, 0), (0x000D, 35, 11, 0), (0x0006, 9, 12, 0),
-    (0x0003, 10, 13, 0), (0x0001, 12, 13, 0), (0x5A7F, 15, 15, 1),
-    (0x3F25, 36, 16, 0), (0x2CF2, 38, 17, 0), (0x207C, 39, 18, 0),
-    (0x17B9, 40, 19, 0), (0x1182, 42, 20, 0), (0x0CEF, 43, 21, 0),
-    (0x09A1, 45, 22, 0), (0x072F, 46, 23, 0), (0x055C, 48, 24, 0),
-    (0x0406, 49, 25, 0), (0x0303, 51, 26, 0), (0x0240, 52, 27, 0),
-    (0x01B1, 54, 28, 0), (0x0144, 56, 29, 0), (0x00F5, 57, 30, 0),
-    (0x00B7, 59, 31, 0), (0x008A, 60, 32, 0), (0x0068, 62, 33, 0),
-    (0x004E, 63, 34, 0), (0x003B, 32, 35, 0), (0x002C, 33, 9, 0),
-    (0x5AE1, 37, 37, 1), (0x484C, 64, 38, 0), (0x3A0D, 65, 39, 0),
-    (0x2EF1, 67, 40, 0), (0x261F, 68, 41, 0), (0x1F33, 69, 42, 0),
-    (0x19A8, 70, 43, 0), (0x1518, 72, 44, 0), (0x1177, 73, 45, 0),
-    (0x0E74, 74, 46, 0), (0x0BFB, 75, 47, 0), (0x09F8, 77, 48, 0),
-    (0x0861, 78, 49, 0), (0x0706, 79, 50, 0), (0x05CD, 48, 51, 0),
-    (0x04DE, 50, 52, 0), (0x040F, 50, 53, 0), (0x0363, 51, 54, 0),
-    (0x02D4, 52, 55, 0), (0x025C, 53, 56, 0), (0x01F8, 54, 57, 0),
-    (0x01A4, 55, 58, 0), (0x0160, 56, 59, 0), (0x0125, 57, 60, 0),
-    (0x00F6, 58, 61, 0), (0x00CB, 59, 62, 0), (0x00AB, 61, 63, 0),
-    (0x008F, 61, 32, 0), (0x5B12, 65, 65, 1), (0x4D04, 80, 66, 0),
-    (0x412C, 81, 67, 0), (0x37D8, 82, 68, 0), (0x2FE8, 83, 69, 0),
-    (0x293C, 84, 70, 0), (0x2379, 86, 71, 0), (0x1EDF, 87, 72, 0),
-    (0x1AA9, 87, 73, 0), (0x174E, 72, 74, 0), (0x1424, 72, 75, 0),
-    (0x119C, 74, 76, 0), (0x0F6B, 74, 77, 0), (0x0D51, 75, 78, 0),
-    (0x0BB6, 77, 79, 0), (0x0A40, 77, 48, 0), (0x5832, 80, 81, 1),
-    (0x4D1C, 88, 82, 0), (0x438E, 89, 83, 0), (0x3BDD, 90, 84, 0),
-    (0x34EE, 91, 85, 0), (0x2EAE, 92, 86, 0), (0x299A, 93, 87, 0),
-    (0x2516, 86, 71, 0), (0x5570, 88, 89, 1), (0x4CA9, 95, 90, 0),
-    (0x44D9, 96, 91, 0), (0x3E22, 97, 92, 0), (0x3824, 99, 93, 0),
-    (0x32B4, 99, 94, 0), (0x2E17, 93, 86, 0), (0x56A8, 95, 96, 1),
-    (0x4F46, 101, 97, 0), (0x47E5, 102, 98, 0), (0x41CF, 103, 99, 0),
-    (0x3C3D, 104, 100, 0), (0x375E, 99, 93, 0), (0x5231, 105, 102, 0),
-    (0x4C0F, 106, 103, 0), (0x4639, 107, 104, 0), (0x415E, 103, 99, 0),
-    (0x5627, 105, 106, 1), (0x50E7, 108, 107, 0), (0x4B85, 109, 103, 0),
-    (0x5597, 110, 109, 0), (0x504F, 111, 107, 0), (0x5A10, 110, 111, 1),
-    (0x5522, 112, 109, 0), (0x59EB, 112, 111, 1),
-    (0x5A1D, 113, 113, 0),  # 113: fixed ~0.5, non-adapting (sign bins)
-]
-_QM_QE = [r[0] for r in _QM_ROWS]
-_QM_NMPS = [r[2] for r in _QM_ROWS]
-# LPS transition with the MPS-switch folded into bit 7 (XOR trick):
-_QM_NLPS_SW = [(r[3] << 7) | r[1] for r in _QM_ROWS]
-
-
-class _QMEncoder:
-    """QM arithmetic encoder (T.81 Annex D).  Context state bytes live
-    in caller-owned bytearrays: bit 7 = current MPS, bits 0-6 = Table
-    D.3 state index; transitions use the XOR-folded switch bit."""
-
-    def __init__(self) -> None:
-        # Register scale matches _QMDecoder's INITDEC (A renormalized in
-        # [0x8000, 0x10000), first code byte after 12 shifts at c>>19).
-        self.a = 0x8000
-        self.c = 0
-        self.ct = 12
-        self.buffer = -1  # pending byte (carry may still bump it)
-        self.sc = 0  # stacked 0xFF bytes awaiting carry resolution
-        self.out = bytearray()
-
-    def _emit(self, byte: int) -> None:
-        self.out.append(byte)
-        if byte == 0xFF:  # B.1.1.5 zero-byte stuffing
-            self.out.append(0x00)
-
-    def _byteout(self) -> None:
-        t = self.c >> 19
-        if t > 0xFF:  # carry: bump pending byte, stacked FFs become 00
-            if self.buffer >= 0:
-                self._emit(self.buffer + 1)
-            for _ in range(self.sc):
-                self._emit(0x00)
-            self.sc = 0
-            # spacer bits guarantee the post-carry byte is not 0xFF
-            self.buffer = t & 0xFF
-        elif t == 0xFF:
-            self.sc += 1  # may still be bumped to 0x00 by a carry
-        else:
-            if self.buffer >= 0:
-                self._emit(self.buffer)
-            for _ in range(self.sc):
-                self._emit(0xFF)
-            self.sc = 0
-            self.buffer = t
-        self.c &= 0x7FFFF
-
-    def encode(self, st: bytearray, i: int, bit: int) -> None:
-        s = st[i]
-        qe = _QM_QE[s & 0x7F]
-        a = self.a - qe
-        if bit == s >> 7:  # MPS
-            if a & 0x8000:
-                self.a = a
-                return  # no renormalization, no estimation update
-            if a < qe:  # conditional exchange: MPS takes upper interval
-                self.c += a
-                self.a = qe
-            else:
-                self.a = a
-            st[i] = (s & 0x80) ^ _QM_NMPS[s & 0x7F]
-        else:  # LPS
-            if a < qe:  # conditional exchange: LPS takes lower interval
-                self.a = a
-            else:
-                self.c += a
-                self.a = qe
-            st[i] = (s & 0x80) ^ _QM_NLPS_SW[s & 0x7F]
-        while True:  # RENORME
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-                self.ct = 8
-            if self.a & 0x8000:
-                break
-
-    def flush(self) -> bytes:
-        # D.1.8: pick the in-interval code value with most trailing 0s
-        t = (self.a - 1 + self.c) & 0xFFFF0000
-        self.c = t + 0x8000 if t < self.c else t
-        self.c <<= self.ct
-        if self.c & 0xF8000000:  # final carry
-            if self.buffer >= 0:
-                self._emit(self.buffer + 1)
-            for _ in range(self.sc):
-                self._emit(0x00)
-        else:
-            if self.buffer >= 0:
-                self._emit(self.buffer)
-            for _ in range(self.sc):
-                self._emit(0xFF)
-        self.sc = 0
-        self.buffer = -1
-        # trailing code bytes (trailing zeros are legal entropy data)
-        self._emit((self.c >> 19) & 0xFF)
-        self._emit((self.c >> 11) & 0xFF)
-        return bytes(self.out)
-
-
-class _QMDecoder:
-    """QM arithmetic decoder (T.81 Annex D mirror of ``_QMEncoder``).
-    Consumes stuffed entropy bytes from ``data`` starting at ``pos``;
-    once the terminating marker is reached it feeds zero bytes, per
-    F.2.2.2 (the tail of the code string is never transmitted)."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.marker_hit = False
-        self._init_registers()
-
-    def _init_registers(self) -> None:
-        self.c = self._next_byte() << 16
-        self.c += self._next_byte() << 8
-        self.c = (self.c << 7) & 0xFFFFFFFF
-        self.ct = 1
-        self.a = 0x8000
-
-    def _next_byte(self) -> int:
-        if self.marker_hit:
-            return 0
-        d, p = self.data, self.pos
-        if p >= len(d):
-            self.marker_hit = True
-            return 0
-        v = d[p]
-        if v == 0xFF:
-            if p + 1 < len(d) and d[p + 1] == 0x00:  # stuffed data byte
-                self.pos = p + 2
-                return 0xFF
-            self.marker_hit = True  # real marker: feed zeros from now on
-            return 0
-        self.pos = p + 1
-        return v
-
-    def _renorm(self) -> None:
-        while self.a < 0x8000:
-            if self.ct == 0:
-                self.c += self._next_byte() << 8
-                self.ct = 8
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            self.a <<= 1
-
-    def decode(self, st: bytearray, i: int) -> int:
-        s = st[i]
-        qe = _QM_QE[s & 0x7F]
-        a = self.a - qe
-        if (self.c >> 16) < a:
-            if a & 0x8000:
-                self.a = a
-                return s >> 7
-            if a < qe:  # conditional exchange: lower interval is LPS
-                bit = (s >> 7) ^ 1
-                st[i] = (s & 0x80) ^ _QM_NLPS_SW[s & 0x7F]
-            else:
-                bit = s >> 7
-                st[i] = (s & 0x80) ^ _QM_NMPS[s & 0x7F]
-            self.a = a
-        else:
-            self.c -= a << 16
-            if a < qe:  # conditional exchange: upper interval is MPS
-                bit = s >> 7
-                st[i] = (s & 0x80) ^ _QM_NMPS[s & 0x7F]
-            else:
-                bit = (s >> 7) ^ 1
-                st[i] = (s & 0x80) ^ _QM_NLPS_SW[s & 0x7F]
-            self.a = qe
-        self._renorm()
-        return bit
-
-    def seek_restart(self) -> None:
-        """Skip to just past the next RSTn marker and re-init (the
-        remaining bytes of the finished restart segment are padding)."""
-        d = self.data
-        p = self.pos
-        while p + 1 < len(d):
-            if d[p] == 0xFF and 0xD0 <= d[p + 1] <= 0xD7:
-                self.pos = p + 2
-                self.marker_hit = False
-                self._init_registers()
-                return
-            p += 1
-        raise ValueError("JPEG: missing restart marker")
-
-
-def _arith_enc_dc(enc, st, ctx, diff, lo, up):
-    """Encode one DC difference per F.1.4.1/F.1.4.4.1; returns the next
-    conditioning context offset for this component."""
-    if diff == 0:
-        enc.encode(st, ctx, 0)
-        return 0
-    enc.encode(st, ctx, 1)
-    sign = 1 if diff < 0 else 0
-    v = (-diff if sign else diff) - 1
-    enc.encode(st, ctx + 1, sign)
-    i = ctx + 2 + sign
-    if v == 0:
-        enc.encode(st, i, 0)
-        m = 0
-    else:
-        enc.encode(st, i, 1)
-        m = 1
-        i = 20  # X1
-        while v >= (m << 1):
-            enc.encode(st, i, 1)
-            m <<= 1
-            i += 1
-        enc.encode(st, i, 0)
-    if m < ((1 << lo) >> 1):
-        nxt = 0
-    elif m > ((1 << up) >> 1):
-        nxt = 12 + sign * 4
-    else:
-        nxt = 4 + sign * 4
-    i += 14
-    mm = m >> 1
-    while mm:
-        enc.encode(st, i, 1 if v & mm else 0)
-        mm >>= 1
-    return nxt
-
-
-def _arith_dec_dc(dec, st, ctx, lo, up):
-    """Decode one DC difference; returns (diff, next context offset)."""
-    if dec.decode(st, ctx) == 0:
-        return 0, 0
-    sign = dec.decode(st, ctx + 1)
-    i = ctx + 2 + sign
-    m = dec.decode(st, i)
-    if m:
-        i = 20
-        while dec.decode(st, i):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("JPEG: arithmetic DC magnitude overflow")
-            i += 1
-    if m < ((1 << lo) >> 1):
-        nxt = 0
-    elif m > ((1 << up) >> 1):
-        nxt = 12 + sign * 4
-    else:
-        nxt = 4 + sign * 4
-    v = m
-    i += 14
-    mm = m >> 1
-    while mm:
-        if dec.decode(st, i):
-            v |= mm
-        mm >>= 1
-    v += 1
-    return (-v if sign else v), nxt
-
-
-def _arith_enc_ac(enc, st, fixed, zz, kx, ss=1, se=63, al=0):
-    """Encode one block's AC run (zigzag coefficients ss..se at point
-    transform al) per F.1.4.2/F.1.4.3 and G.1.3.2: per-k EOB decision,
-    zero-run, fixed-probability sign, magnitude category with the Kx
-    low/high spectral split.  Sequential scans use (1, 63, 0)."""
-    ke = se
-    while ke >= ss and (abs(int(zz[ke])) >> al) == 0:
-        ke -= 1
-    k = ss
-    while k <= ke:
-        s3 = 3 * (k - 1)
-        enc.encode(st, s3, 0)  # not EOB
-        while (abs(int(zz[k])) >> al) == 0:
-            enc.encode(st, s3 + 1, 0)
-            k += 1
-            s3 += 3
-        enc.encode(st, s3 + 1, 1)
-        v = int(zz[k])
-        sign = 1 if v < 0 else 0
-        enc.encode(fixed, 0, sign)
-        v = ((-v if sign else v) >> al) - 1
-        i = s3 + 2
-        if v == 0:
-            enc.encode(st, i, 0)
-            m = 0
-        else:
-            enc.encode(st, i, 1)
-            if v == 1:
-                enc.encode(st, i, 0)
-                m = 1
-            else:
-                enc.encode(st, i, 1)
-                m = 2
-                i = 189 if k <= kx else 217
-                while v >= (m << 1):
-                    enc.encode(st, i, 1)
-                    m <<= 1
-                    i += 1
-                enc.encode(st, i, 0)
-        i += 14
-        mm = m >> 1
-        while mm:
-            enc.encode(st, i, 1 if v & mm else 0)
-            mm >>= 1
-        k += 1
-    if ke < se:
-        enc.encode(st, 3 * (k - 1), 1)  # EOB
-
-
-def _arith_dec_ac(dec, st, fixed, zz, kx, ss=1, se=63, al=0):
-    """Decode one block's AC coefficients into zigzag positions ss..se
-    (values scaled by 1 << al — the successive-approximation domain)."""
-    k = ss
-    while k <= se:
-        s3 = 3 * (k - 1)
-        if dec.decode(st, s3):  # EOB
-            return
-        while dec.decode(st, s3 + 1) == 0:
-            k += 1
-            s3 += 3
-            if k > se:
-                raise ValueError("JPEG: arithmetic AC index overflow")
-        sign = dec.decode(fixed, 0)
-        i = s3 + 2
-        m = dec.decode(st, i)
-        if m:
-            if dec.decode(st, i):
-                m = 2
-                i = 189 if k <= kx else 217
-                while dec.decode(st, i):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError(
-                            "JPEG: arithmetic AC magnitude overflow"
-                        )
-                    i += 1
-        v = m
-        i += 14
-        mm = m >> 1
-        while mm:
-            if dec.decode(st, i):
-                v |= mm
-            mm >>= 1
-        v += 1
-        zz[k] = (-v if sign else v) << al
-        k += 1
-
-
-def _arith_enc_ac_refine(enc, st, fixed, zz, ss, se, al):
-    """Encode one block's AC successive-approximation refinement scan
-    (G.1.3.3, the jcarith encode_mcu_AC_refine dual): correction bits
-    for history-nonzero coefficients at st+2, newly-significant flags
-    at st+1 with fixed-probability signs, EOB decisions once past the
-    prior pass's end-of-block index."""
-    kex = se  # last coefficient nonzero BEFORE this pass
-    while kex >= ss and (abs(int(zz[kex])) >> (al + 1)) == 0:
-        kex -= 1
-    ke = se  # last coefficient nonzero AFTER this pass
-    while ke >= ss and (abs(int(zz[ke])) >> al) == 0:
-        ke -= 1
-    k = ss
-    while k <= se:
-        s3 = 3 * (k - 1)
-        if k > kex:
-            if k > ke:
-                enc.encode(st, s3, 1)  # EOB
-                return
-            enc.encode(st, s3, 0)
-        while True:
-            v = int(zz[k])
-            ta = abs(v) >> al
-            if (abs(v) >> (al + 1)) != 0:  # history-nonzero
-                enc.encode(st, s3 + 2, ta & 1)
-                break
-            if ta != 0:  # newly significant (necessarily ta == 1)
-                enc.encode(st, s3 + 1, 1)
-                enc.encode(fixed, 0, 1 if v < 0 else 0)
-                break
-            enc.encode(st, s3 + 1, 0)
-            k += 1
-            s3 += 3
-        k += 1
-
-
-def _arith_dec_ac_refine(dec, st, fixed, zz, ss, se, al):
-    """Decode one block's AC refinement scan (jdarith
-    decode_mcu_AC_refine dual of ``_arith_enc_ac_refine``)."""
-    p1 = 1 << al
-    m1 = -1 << al
-    kex = se
-    while kex >= ss and zz[kex] == 0:
-        kex -= 1
-    k = ss
-    while k <= se:
-        s3 = 3 * (k - 1)
-        if k > kex:
-            if dec.decode(st, s3):  # EOB
-                return
-        while True:
-            if zz[k] != 0:
-                if dec.decode(st, s3 + 2):
-                    zz[k] += m1 if zz[k] < 0 else p1
-                break
-            if dec.decode(st, s3 + 1):
-                zz[k] = m1 if dec.decode(fixed, 0) else p1
-                break
-            k += 1
-            s3 += 3
-            if k > se:
-                raise ValueError("JPEG: arithmetic AC refine overflow")
-        k += 1
-
-
-def _decode_arith_prog_scan(
-    b: bytes,
-    pos: int,
-    scan_comps: list[tuple[int, int, int]],
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    coefs: dict[int, np.ndarray],
-    byid: dict[int, tuple[int, int, int]],
-    max_h: int,
-    max_v: int,
-    mcu_rows: int,
-    mcu_cols: int,
-    w: int,
-    h: int,
-    restart: int,
-    dc_cond: dict[int, tuple[int, int]],
-    ac_cond: dict[int, int],
-) -> None:
-    """One progressive-arithmetic (SOF10) SOS into the coefficient
-    store: DC first scans reuse the sequential DC model in the
-    Al-shifted domain, DC refinements are single fixed-probability
-    bits, AC first/refine use the generalized F.1.4.3/G.1.3.3 models.
-    Statistics reset per scan and per restart interval (jdarith
-    start_pass/process_restart semantics)."""
-    ns = len(scan_comps)
-    if ss == 0 and se != 0:
-        raise ValueError("JPEG: DC scan with nonzero Se")
-    if ss > se or se > 63 or al > 13 or (ah and ah != al + 1):
-        raise ValueError("JPEG: bad progression parameters")
-    if ss > 0 and ns != 1:
-        raise ValueError("JPEG: progressive AC scan must be 1-component")
-    dec = _QMDecoder(b, pos)
-
-    def fresh_stats():
-        return (
-            {td: bytearray(64) for _, td, _ in scan_comps},
-            {ta: bytearray(256) for _, _, ta in scan_comps},
-            bytearray([113]),
-        )
-
-    dc_stats, ac_stats, fixed = fresh_stats()
-    dc_ctx = {cid: 0 for cid, _, _ in scan_comps}
-    pred = {cid: 0 for cid, _, _ in scan_comps}
-    if ns == 1:
-        cid0, _, _ = scan_comps[0]
-        sh0, sv0, _ = byid[cid0]
-        nbx_u = -(-(-(-(w * sh0) // max_h)) // 8)
-        nby_u = -(-(-(-(h * sv0) // max_v)) // 8)
-        n_units = nbx_u * nby_u
-    else:
-        n_units = mcu_rows * mcu_cols
-
-    def dc_block(cid, td, by, bx):
-        zz = coefs[cid][by, bx]
-        if ah == 0:
-            lo, up = dc_cond.get(td, (0, 1))
-            diff, dc_ctx[cid] = _arith_dec_dc(
-                dec, dc_stats[td], dc_ctx[cid], lo, up
-            )
-            pred[cid] += diff
-            zz[0] = pred[cid] << al
-        elif dec.decode(fixed, 0):
-            zz[0] |= 1 << al
-
-    for unit in range(n_units):
-        if restart and unit and unit % restart == 0:
-            dec.seek_restart()
-            dc_stats, ac_stats, fixed = fresh_stats()
-            dc_ctx = dict.fromkeys(dc_ctx, 0)
-            pred = dict.fromkeys(pred, 0)
-        if ns == 1:
-            by, bx = divmod(unit, nbx_u)
-            cid, td, ta = scan_comps[0]
-            if ss == 0:
-                dc_block(cid, td, by, bx)
-            else:
-                kx = ac_cond.get(ta, 5)
-                zz = coefs[cid][by, bx]
-                if ah == 0:
-                    _arith_dec_ac(
-                        dec, ac_stats[ta], fixed, zz, kx, ss, se, al
-                    )
-                else:
-                    _arith_dec_ac_refine(
-                        dec, ac_stats[ta], fixed, zz, ss, se, al
-                    )
-        else:
-            my, mx = divmod(unit, mcu_cols)
-            for cid, td, _ta in scan_comps:
-                sh, sv, _ = byid[cid]
-                for by in range(sv):
-                    for bx in range(sh):
-                        dc_block(cid, td, my * sv + by, mx * sh + bx)
-
-
-def encode_jpeg_progressive_arithmetic(
-    img: np.ndarray,
-    quality: int = 90,
-    subsample: bool = True,
-    restart_interval: int = 0,
-    scans: list[tuple] | None = None,
-) -> bytes:
-    """uint8 grayscale (HxW) or RGB (HxWx3) → progressive
-    arithmetic-coded JFIF JPEG (SOF10): the libjpeg default scan
-    script (spectral selection + successive approximation) entropy-
-    coded by the Annex-D QM coder — no Huffman tables at all, fresh
-    statistics per scan.  Quantized coefficients are identical to
-    ``encode_jpeg`` at the same (quality, subsample), so decode must
-    match the baseline decode bit-for-bit."""
-    import struct
-
-    gray, h, w, samp, qt_l, qt_c, mcu_rows, mcu_cols, zzs = (
-        _jpeg_quantized(img, quality, subsample)
-    )
-    ncomp = 1 if gray else 3
-    script = scans if scans is not None else _default_prog_scans(ncomp)
-    for comp_idx, ss, _se, _ah, _al in script:
-        if len(comp_idx) > 1 and ss != 0:
-            raise ValueError(
-                f"illegal progressive scan {comp_idx} Ss={ss}: AC scans "
-                "must be single-component (T.81 G.1.1.1.1)"
-            )
-    tbl_of = [0] + ([] if gray else [1, 1])
-    lo, up, kx = 0, 1, 5
-    max_h = max(s[0] for s in samp)
-    max_v = max(s[1] for s in samp)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, b"\x00" + bytes(qt_l.astype(np.uint8).ravel()[_ZIGZAG]))
-    if not gray:
-        out += seg(
-            0xFFDB, b"\x01" + bytes(qt_c.astype(np.uint8).ravel()[_ZIGZAG])
-        )
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sh, sv = samp[ci]
-        sof += struct.pack(">BBB", ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1)
-    out += seg(0xFFCA, sof)  # SOF10: progressive, arithmetic
-    dac = bytes([0x00, lo | (up << 4), 0x10, kx])
-    if not gray:
-        dac += bytes([0x01, lo | (up << 4), 0x11, kx])
-    out += seg(0xFFCC, dac)
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-
-    for comp_idx, ss, se, ah, al in script:
-        sos = bytes([len(comp_idx)])
-        for ci in comp_idx:
-            td_ta = 0 if ci == 0 else 0x11
-            sos += bytes([ci + 1, td_ta])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xFFDA, sos)
-
-        enc = _QMEncoder()
-        dc_stats = {t: bytearray(64) for t in set(tbl_of)}
-        ac_stats = {t: bytearray(256) for t in set(tbl_of)}
-        fixed = bytearray([113])
-        dc_ctx = [0] * ncomp
-        pred = [0] * ncomp
-        if len(comp_idx) > 1:
-            n_units = mcu_rows * mcu_cols
-        else:
-            ci0 = comp_idx[0]
-            sh0, sv0 = samp[ci0]
-            nbx_u = -(-(-(-(w * sh0) // max_h)) // 8)
-            nby_u = -(-(-(-(h * sv0) // max_v)) // 8)
-            n_units = nbx_u * nby_u
-
-        def dc_block(ci, blk):
-            t = tbl_of[ci]
-            if ah == 0:
-                tv = int(blk[0]) >> al  # arithmetic shift per G.1.2.1
-                diff = tv - pred[ci]
-                pred[ci] = tv
-                dc_ctx[ci] = _arith_enc_dc(
-                    enc, dc_stats[t], dc_ctx[ci], diff, lo, up
-                )
-            else:
-                enc.encode(fixed, 0, (int(blk[0]) >> al) & 1)
-
-        scan_bytes = bytearray()
-        n_rst = 0
-        for unit in range(n_units):
-            if restart_interval and unit and unit % restart_interval == 0:
-                scan_bytes += enc.flush()
-                scan_bytes += bytes([0xFF, 0xD0 + n_rst])
-                n_rst = (n_rst + 1) & 7
-                enc = _QMEncoder()
-                dc_stats = {t: bytearray(64) for t in set(tbl_of)}
-                ac_stats = {t: bytearray(256) for t in set(tbl_of)}
-                fixed = bytearray([113])
-                dc_ctx = [0] * ncomp
-                pred = [0] * ncomp
-            if len(comp_idx) > 1:
-                my, mx = divmod(unit, mcu_cols)
-                for ci in comp_idx:
-                    sh, sv = samp[ci]
-                    for by in range(sv):
-                        for bx in range(sh):
-                            dc_block(ci, zzs[ci][my * sv + by, mx * sh + bx])
-            else:
-                by, bx = divmod(unit, nbx_u)
-                blk = zzs[ci0][by, bx]
-                if ss == 0:
-                    dc_block(ci0, blk)
-                elif ah == 0:
-                    _arith_enc_ac(
-                        enc, ac_stats[tbl_of[ci0]], fixed, blk, kx,
-                        ss, se, al,
-                    )
-                else:
-                    _arith_enc_ac_refine(
-                        enc, ac_stats[tbl_of[ci0]], fixed, blk, ss, se, al
-                    )
-        scan_bytes += enc.flush()
-        out += scan_bytes
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _decode_arith_seq_scan(
-    b: bytes,
-    pos: int,
-    scan_comps: list[tuple[int, int, int]],
-    coefs: dict[int, np.ndarray],
-    byid: dict[int, tuple[int, int, int]],
-    max_h: int,
-    max_v: int,
-    mcu_rows: int,
-    mcu_cols: int,
-    w: int,
-    h: int,
-    restart: int,
-    dc_cond: dict[int, tuple[int, int]],
-    ac_cond: dict[int, int],
-) -> None:
-    """One arithmetic sequential (SOF9) SOS into the coefficient store.
-    Interleaved scans run in MCU order; single-component scans in block
-    raster order over the component's used blocks (T.81 A.2.2)."""
-    ns = len(scan_comps)
-    dec = _QMDecoder(b, pos)
-
-    def fresh_stats():
-        return (
-            {td: bytearray(64) for _, td, _ in scan_comps},
-            {ta: bytearray(256) for _, _, ta in scan_comps},
-            bytearray([113]),
-        )
-
-    dc_stats, ac_stats, fixed = fresh_stats()
-    dc_ctx = {cid: 0 for cid, _, _ in scan_comps}
-    pred = {cid: 0 for cid, _, _ in scan_comps}
-    if ns == 1:
-        cid0, _, _ = scan_comps[0]
-        sh0, sv0, _ = byid[cid0]
-        nbx_u = -(-(-(-(w * sh0) // max_h)) // 8)
-        nby_u = -(-(-(-(h * sv0) // max_v)) // 8)
-        n_units = nbx_u * nby_u
-    else:
-        n_units = mcu_rows * mcu_cols
-
-    def one_block(cid, td, ta, by, bx):
-        lo, up = dc_cond.get(td, (0, 1))
-        kx = ac_cond.get(ta, 5)
-        zz = coefs[cid][by, bx]
-        diff, dc_ctx[cid] = _arith_dec_dc(
-            dec, dc_stats[td], dc_ctx[cid], lo, up
-        )
-        pred[cid] += diff
-        zz[0] = pred[cid]
-        _arith_dec_ac(dec, ac_stats[ta], fixed, zz, kx)
-
-    for unit in range(n_units):
-        if restart and unit and unit % restart == 0:
-            dec.seek_restart()
-            dc_stats, ac_stats, fixed = fresh_stats()
-            dc_ctx = dict.fromkeys(dc_ctx, 0)
-            pred = dict.fromkeys(pred, 0)
-        if ns == 1:
-            by, bx = divmod(unit, nbx_u)
-            cid, td, ta = scan_comps[0]
-            one_block(cid, td, ta, by, bx)
-        else:
-            my, mx = divmod(unit, mcu_cols)
-            for cid, td, ta in scan_comps:
-                sh, sv, _ = byid[cid]
-                for by in range(sv):
-                    for bx in range(sh):
-                        one_block(cid, td, ta, my * sv + by, mx * sh + bx)
-
-
-def encode_jpeg_arithmetic(
-    img: np.ndarray,
-    quality: int = 90,
-    subsample: bool = True,
-    restart_interval: int = 0,
-) -> bytes:
-    """uint8 grayscale (HxW) or RGB (HxWx3) → arithmetic-coded
-    sequential JFIF JPEG (SOF9, ITU T.81 Annexes D/F): same transform/
-    quantization front half as ``encode_jpeg``, with the QM coder in
-    place of Huffman — no code tables in the stream, a DAC segment
-    carries the conditioning bounds (default L=0, U=1, Kx=5), and the
-    adaptive contexts typically shave 5-10% off the Huffman byte count.
-    The round-trip partner of ``decode_jpeg``'s SOF9 path."""
-    import struct
-
-    gray, h, w, samp, qt_l, qt_c, mcu_rows, mcu_cols, zzs = (
-        _jpeg_quantized(img, quality, subsample, 8)
-    )
-    ncomp = 1 if gray else 3
-    tbl_of = [0] + ([] if gray else [1, 1])
-    lo, up, kx = 0, 1, 5
-
-    def fresh_stats():
-        return (
-            {t: bytearray(64) for t in set(tbl_of)},
-            {t: bytearray(256) for t in set(tbl_of)},
-            bytearray([113]),
-        )
-
-    enc = _QMEncoder()
-    dc_stats, ac_stats, fixed = fresh_stats()
-    dc_ctx = [0] * ncomp
-    pred = [0] * ncomp
-    scan = bytearray()
-    n_rst = 0
-    for mcu in range(mcu_rows * mcu_cols):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            scan += enc.flush()
-            scan += bytes([0xFF, 0xD0 + n_rst])
-            n_rst = (n_rst + 1) & 7
-            enc = _QMEncoder()
-            dc_stats, ac_stats, fixed = fresh_stats()
-            dc_ctx = [0] * ncomp
-            pred = [0] * ncomp
-        my, mx = divmod(mcu, mcu_cols)
-        for ci in range(ncomp):
-            sh, sv = samp[ci]
-            t = tbl_of[ci]
-            for by in range(sv):
-                for bx in range(sh):
-                    zz = zzs[ci][my * sv + by, mx * sh + bx]
-                    diff = int(zz[0]) - pred[ci]
-                    pred[ci] = int(zz[0])
-                    dc_ctx[ci] = _arith_enc_dc(
-                        enc, dc_stats[t], dc_ctx[ci], diff, lo, up
-                    )
-                    _arith_enc_ac(enc, ac_stats[t], fixed, zz, kx)
-    scan += enc.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(
-        0xFFDB, bytes([0]) + bytes(qt_l.astype(np.uint8).ravel()[_ZIGZAG])
-    )
-    if not gray:
-        out += seg(
-            0xFFDB, bytes([1]) + bytes(qt_c.astype(np.uint8).ravel()[_ZIGZAG])
-        )
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sh, sv = samp[ci]
-        sof += struct.pack(">BBB", ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1)
-    out += seg(0xFFC9, sof)  # SOF9: extended sequential, arithmetic
-    dac = bytes([0x00, lo | (up << 4), 0x10, kx])
-    if not gray:
-        dac += bytes([0x01, lo | (up << 4), 0x11, kx])
-    out += seg(0xFFCC, dac)  # DAC conditioning
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0 if ci == 0 else 0x11])
-    sos += b"\x00\x3f\x00"
-    out += seg(0xFFDA, sos)
-    out += scan
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def decode_jpeg(b: bytes) -> np.ndarray:
-    """JPEG (sequential SOF0/SOF1 at 8 OR 12 bits, progressive SOF2,
-    lossless SOF3) → uint8 array (uint16 above 8-bit precision), pure
-    numpy+stdlib: marker parse, canonical Huffman, dequantize,
-    orthonormal IDCT, chroma upsample, JFIF YCbCr→RGB.  Handles
-    grayscale and any integer sampling grid (4:4:4/4:2:2/4:2:0),
-    DRI/RSTn restart markers, 16-bit (Pq=1) quantization tables, and —
-    for SOF2 — multi-scan spectral selection and successive
-    approximation (DC first/refine, AC first with EOB runs, AC
-    refinement with correction bits, per ITU T.81 §G.2 — the libjpeg
-    decode_mcu_* semantics).  SOF3 decodes the Annex-H predictive
-    process (selectors 1-7, point transform, 2..16-bit precision,
-    components returned untransformed — T.81 defines no lossless color
-    transform).  Arithmetic streams — sequential SOF9 AND progressive
-    SOF10 — decode natively via the Annex-D QM coder; hierarchical and
-    lossless-arithmetic streams raise at the disclosed Pillow seam.  Perf note: the entropy loop is
-    interpreted Python (~bit-serial) — correct but slow for megapixel
-    images; with Pillow installed ``_real_decode`` prefers the C path
-    (the documented fast seam)."""
-    import struct
-
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qts: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    comps: list[tuple[int, int, int, int]] = []  # id, h, v, tq
-    h = w = 0
-    restart = 0
-    prec = 8
-    progressive = False
-    lossless = False
-    arith = False
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    coefs: dict[int, np.ndarray] | None = None  # cid -> (nby, nbx, 64) zigzag
-    ll_planes: dict[int, np.ndarray] | None = None  # cid -> (h, w) int32
-    ll_pt: dict[int, int] = {}  # cid -> point transform of its scan
-    geom: tuple | None = None
-    scan_comps: list[tuple[int, int, int]] = []  # id, td, ta
-    # sequential-Huffman scans: (entropy start, scan comps, Huffman
-    # tables and restart interval AS OF this scan — DHT/DRI may appear
-    # between scans of a multi-scan file)
-    seq_scans: list[tuple[int, list, dict, int]] = []
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG: bad marker alignment")
-        # T.81 B.1.1.2: any number of 0xFF FILL bytes may precede a
-        # marker code between segments — skip them (conformant encoders
-        # emit them; entropy-segment fill is handled separately)
-        while b[pos + 1] == 0xFF and pos + 2 < len(b):
-            pos += 1
-        marker = b[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-        data = b[pos + 4 : pos + 2 + seglen]
-        if len(data) != seglen - 2:
-            raise ValueError("JPEG: truncated segment")
-        if marker == 0xDB:  # DQT (may hold several tables)
-            off = 0
-            while off < len(data):
-                pq, tq = data[off] >> 4, data[off] & 0xF
-                nb = 2 if pq else 1  # Pq=1: 16-bit big-endian entries
-                if off + 1 + 64 * nb > len(data):
-                    raise ValueError("JPEG: truncated DQT")
-                tbl = np.zeros(64, np.float64)
-                tbl[_ZIGZAG] = np.frombuffer(
-                    data, ">u2" if pq else np.uint8, count=64, offset=off + 1
-                )
-                qts[tq] = tbl.reshape(8, 8)
-                off += 1 + 64 * nb
-        elif marker == 0xC4:  # DHT (may hold several tables)
-            off = 0
-            while off < len(data):
-                cls, dest = data[off] >> 4, data[off] & 0xF
-                bits = list(data[off + 1 : off + 17])
-                n = sum(bits)
-                if off + 17 + n > len(data):
-                    raise ValueError("JPEG: truncated DHT")
-                vals = list(data[off + 17 : off + 17 + n])
-                huff[(cls, dest)] = _huff_decoder(bits, vals)
-                off += 17 + n
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA):
-            # SOF0/1 sequential, 2 progressive, 3 lossless,
-            # 9 arithmetic sequential, 10 arithmetic progressive
-            progressive = marker in (0xC2, 0xCA)
-            lossless = marker == 0xC3
-            arith = marker in (0xC9, 0xCA)
-            prec, h, w, nc = struct.unpack(">BHHB", data[:6])
-            if lossless:
-                if not 2 <= prec <= 16:
-                    raise ValueError("JPEG: bad lossless precision")
-            elif prec not in (8, 12):
-                raise ValueError(f"JPEG: bad DCT precision {prec}")
-            if len(data) < 6 + 3 * nc:
-                raise ValueError("JPEG: truncated SOF")
-            for ci in range(nc):
-                cid, hv, tq = data[6 + 3 * ci : 9 + 3 * ci]
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-            if lossless and any(
-                c[1] != 1 or c[2] != 1 for c in comps
-            ):
-                raise NotImplementedError(
-                    "lossless JPEG with subsampled components needs Pillow"
-                )
-        elif marker in (0xC5, 0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG SOF{marker - 0xC0}: baseline (SOF0/SOF1, 8/12-bit), "
-                "progressive (SOF2/SOF10), lossless (SOF3), and arithmetic "
-                "sequential (SOF9) decode natively — hierarchical and "
-                "lossless-arithmetic streams need Pillow"
-            )
-        elif marker == 0xCC:  # DAC: arithmetic conditioning
-            off = 0
-            while off + 2 <= len(data):
-                tc, tb = data[off] >> 4, data[off] & 0xF
-                val = data[off + 1]
-                if tc == 0:
-                    dc_cond[tb] = (val & 0xF, val >> 4)
-                else:
-                    ac_cond[tb] = val
-                off += 2
-        elif marker == 0xDD:  # DRI
-            (restart,) = struct.unpack(">H", data[:2])
-        elif marker == 0xDA:  # SOS — entropy data follows
-            ns = data[0]
-            sc = [
-                (data[1 + 2 * ci], data[2 + 2 * ci] >> 4,
-                 data[2 + 2 * ci] & 0xF)
-                for ci in range(ns)
-            ]
-            if lossless:
-                if not comps:
-                    raise ValueError("JPEG: SOS before SOF")
-                pred_sel = data[1 + 2 * ns]
-                al = data[3 + 2 * ns] & 0xF
-                if not 1 <= pred_sel <= 7:
-                    raise ValueError("JPEG: bad lossless predictor")
-                if not 0 <= al < prec:
-                    raise ValueError("JPEG: bad lossless point transform")
-                if ll_planes is None:
-                    ll_planes = {
-                        cid: np.zeros((h, w), np.int32)
-                        for cid, _, _, _ in comps
-                    }
-                for cid, _, _ in sc:
-                    ll_pt[cid] = al
-                scan_comps = sc
-                start = pos + 2 + seglen
-                _decode_lossless_scan(
-                    b, start, sc, pred_sel, al, huff, ll_planes,
-                    prec, restart,
-                )
-                pos = _jpeg_entropy_end(b, start)
-                continue
-            if arith and not progressive:
-                if not comps:
-                    raise ValueError("JPEG: SOS before SOF")
-                if geom is None:
-                    mh = max(c[1] for c in comps)
-                    mv = max(c[2] for c in comps)
-                    mc = -(-w // (8 * mh))
-                    mr = -(-h // (8 * mv))
-                    geom = (mh, mv, mr, mc)
-                    coefs = {
-                        cid: np.zeros((mr * sv, mc * sh, 64), np.int64)
-                        for cid, sh, sv, _ in comps
-                    }
-                scan_comps = sc
-                start = pos + 2 + seglen
-                _decode_arith_seq_scan(
-                    b, start, sc, coefs,
-                    {cid: (sh, sv, tq) for cid, sh, sv, tq in comps},
-                    *geom, w, h, restart, dc_cond, ac_cond,
-                )
-                pos = _jpeg_entropy_end(b, start)
-                continue
-            if not progressive:
-                # Collect EVERY scan (T.81 allows one SOS per component
-                # in sequential mode — breaking on the first silently
-                # left later components' planes at zero) and keep
-                # decoding markers; tables/DRI are snapshotted per scan.
-                scan_comps = sc
-                start = pos + 2 + seglen
-                seq_scans.append((start, sc, dict(huff), restart))
-                pos = _jpeg_entropy_end(b, start)
-                continue
-            if not comps:
-                raise ValueError("JPEG: SOS before SOF")
-            ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
-            ah, al = data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 0xF
-            if geom is None:
-                mh = max(c[1] for c in comps)
-                mv = max(c[2] for c in comps)
-                mc = -(-w // (8 * mh))
-                mr = -(-h // (8 * mv))
-                geom = (mh, mv, mr, mc)
-                coefs = {
-                    cid: np.zeros((mr * sv, mc * sh, 64), np.int64)
-                    for cid, sh, sv, _ in comps
-                }
-            scan_comps = sc
-            start = pos + 2 + seglen
-            if arith:
-                _decode_arith_prog_scan(
-                    b, start, sc, ss, se, ah, al, coefs,
-                    {cid: (sh, sv, tq) for cid, sh, sv, tq in comps},
-                    *geom, w, h, restart, dc_cond, ac_cond,
-                )
-            else:
-                _decode_progressive_scan(
-                    b, start, sc, ss, se, ah, al, huff, coefs,
-                    {cid: (sh, sv, tq) for cid, sh, sv, tq in comps},
-                    *geom, w, h, restart,
-                )
-            pos = _jpeg_entropy_end(b, start)
-            continue
-        pos += 2 + seglen
-    if not comps or not scan_comps:
-        raise ValueError("JPEG missing SOF/SOS")
-
-    if lossless:
-        if ll_planes is None:
-            raise ValueError("JPEG: lossless frame without scan")
-        dtype = np.uint8 if prec <= 8 else np.uint16
-        arrs = [
-            (ll_planes[cid] << ll_pt.get(cid, 0)).astype(dtype)
-            for cid, _, _, _ in comps
-        ]
-        # No color transform: T.81 defines none for lossless; components
-        # are returned exactly as stored (our encoder stores channels).
-        return arrs[0] if len(arrs) == 1 else np.stack(arrs, axis=-1)
-
-    max_h = max(c[1] for c in comps)
-    max_v = max(c[2] for c in comps)
-    mcu_cols = -(-w // (8 * max_h))
-    mcu_rows = -(-h // (8 * max_v))
-    byid = {cid: (sh, sv, tq) for cid, sh, sv, tq in comps}
-
-    if progressive or arith:
-        planes = {}
-        for cid, sh, sv, tq in comps:
-            if tq not in qts:
-                raise ValueError("JPEG: missing quantization table")
-            zz = coefs[cid]
-            nby, nbx = zz.shape[:2]
-            nat = np.zeros((nby, nbx, 64), np.float64)
-            nat[..., _ZIGZAG] = zz * qts[tq].ravel()[_ZIGZAG]
-            blocks = np.einsum(
-                "ik,abij,jl->abkl",
-                _DCT_T,
-                nat.reshape(nby, nbx, 8, 8),
-                _DCT_T,
-            )
-            planes[cid] = (
-                blocks.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-                + float(1 << (prec - 1))
-            )
-        return _jpeg_planes_to_image(planes, comps, max_h, max_v, h, w, prec)
-
-    planes = {
-        cid: np.zeros((mcu_rows * sv * 8, mcu_cols * sh * 8), np.float64)
-        for cid, sh, sv, _ in comps
-    }
-
-    for start, sc, huff_s, rst_s in seq_scans:
-        br = _JpegBitReader(b, start)
-        pred = {cid: 0 for cid, _, _ in sc}
-        n_rst = 0
-
-        def one_block(cid, dc_t, ac_t, tq, r0, c0):
-            zz = np.zeros(64, np.int64)
-            cat = _read_huff(br, dc_t)
-            diff = _extend(br.bits(cat), cat) if cat else 0
-            pred[cid] += diff
-            zz[0] = pred[cid]
-            k = 1
-            while k < 64:
-                sym = _read_huff(br, ac_t)
-                if sym == 0x00:  # EOB
-                    break
-                if sym == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                run, cat = sym >> 4, sym & 0xF
-                k += run
-                if k > 63:
-                    raise ValueError("JPEG: AC index overflow")
-                zz[k] = _extend(br.bits(cat), cat)
-                k += 1
-            coef = np.zeros(64, np.float64)
-            coef[_ZIGZAG] = zz * qts[tq].ravel()[_ZIGZAG]
-            block = _DCT_T.T @ coef.reshape(8, 8) @ _DCT_T
-            planes[cid][r0 : r0 + 8, c0 : c0 + 8] = (
-                block + float(1 << (prec - 1))
-            )
-
-        if len(sc) == 1:
-            # T.81 A.2.2: a one-component scan is NON-interleaved — its
-            # data units tile the component's OWN block grid (no MCU
-            # padding to the frame's max sampling factors)
-            cid, td, ta = sc[0]
-            sh, sv, tq = byid[cid]
-            dc_t, ac_t = huff_s[(0, td)], huff_s[(1, ta)]
-            cw = -(-(w * sh) // max_h)  # component width (A.1.1)
-            chh = -(-(h * sv) // max_v)
-            bw, bh = -(-cw // 8), -(-chh // 8)
-            for n in range(bh * bw):
-                if rst_s and n and n % rst_s == 0:
-                    br.align_and_expect_rst(n_rst)
-                    n_rst = (n_rst + 1) & 7
-                    pred = dict.fromkeys(pred, 0)
-                by, bx = divmod(n, bw)
-                one_block(cid, dc_t, ac_t, tq, by * 8, bx * 8)
-            continue
-        for mcu in range(mcu_rows * mcu_cols):
-            if rst_s and mcu and mcu % rst_s == 0:
-                br.align_and_expect_rst(n_rst)
-                n_rst = (n_rst + 1) & 7
-                pred = dict.fromkeys(pred, 0)
-            my, mx = divmod(mcu, mcu_cols)
-            for cid, td, ta in sc:
-                sh, sv, tq = byid[cid]
-                dc_t, ac_t = huff_s[(0, td)], huff_s[(1, ta)]
-                for by in range(sv):
-                    for bx in range(sh):
-                        one_block(
-                            cid, dc_t, ac_t, tq,
-                            (my * sv + by) * 8, (mx * sh + bx) * 8,
-                        )
-
-    return _jpeg_planes_to_image(planes, comps, max_h, max_v, h, w, prec)
-
-
-def _jpeg_planes_to_image(
-    planes: dict[int, np.ndarray],
-    comps: list[tuple[int, int, int, int]],
-    max_h: int,
-    max_v: int,
-    h: int,
-    w: int,
-    prec: int = 8,
-) -> np.ndarray:
-    """Shared decode tail: chroma upsample + JFIF YCbCr→RGB.  12-bit
-    frames center chroma at 2048, clamp to 0..4095, and come back as
-    uint16 (uint8 at 8-bit) — the libjpeg ``sample_range_limit``
-    convention at either precision."""
-    half = float(1 << (prec - 1))
-    lim = (1 << prec) - 1
-    dtype = np.uint8 if prec <= 8 else np.uint16
-    full = []
-    for cid, sh, sv, _ in comps:
-        p = planes[cid]
-        if max_h % sh or max_v % sv:
-            raise NotImplementedError("non-integer chroma upsampling")
-        p = p.repeat(max_v // sv, axis=0).repeat(max_h // sh, axis=1)
-        full.append(p[:h, :w])
-    if len(full) == 1:
-        return np.clip(np.round(full[0]), 0, lim).astype(dtype)
-    y, cb, cr = full
-    r = y + 1.402 * (cr - half)
-    g = y - 0.344136 * (cb - half) - 0.714136 * (cr - half)
-    bl = y + 1.772 * (cb - half)
-    return np.clip(np.round(np.stack([r, g, bl], axis=-1)), 0, lim).astype(
-        dtype
-    )
-
-
 def _numpy_decode(b: bytes) -> np.ndarray:
     if b.startswith(b"P6"):
         return decode_ppm(b)
@@ -2995,14 +559,10 @@ def _numpy_decode(b: bytes) -> np.ndarray:
         return decode_png(b)
     if b[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(b)
-    if b[:2] == b"\xff\xd8":
-        return decode_jpeg(b)
     raise NotImplementedError(
         "numpy codec handles uncompressed PPM/BMP, full-matrix PNG "
-        "(1/2/4/8/16-bit, gray/RGB/palette/alpha, Adam7), single-frame "
-        "GIF, and baseline (SOF0/SOF1, incl. 12-bit) + progressive "
-        "(SOF2/SOF10) + lossless (SOF3) + arithmetic (SOF9/SOF10) JPEG; "
-        "hierarchical and lossless-arithmetic JPEG require "
+        "(1/2/4/8/16-bit, gray/RGB/palette/alpha, Adam7) and "
+        "single-frame GIF; other formats (JPEG included) require "
         "Pillow — not in this container"
     )
 
@@ -3032,13 +592,9 @@ def _pillow():
 
 def _real_decode(b: bytes) -> np.ndarray:
     """Best-available decode: Pillow when installed (any format it
-    knows, and ~100x faster than the interpreted JPEG entropy loop),
-    else the native codecs (PPM/BMP, full-matrix PNG, single-frame
-    GIF, baseline incl. 12-bit AND progressive AND lossless SOF3
-    AND arithmetic SOF9/SOF10 JPEG), else a NotImplementedError
-    naming the missing dependency — the disclosed seam is now
-    hierarchical/lossless-arithmetic JPEG only in a Pillow-less
-    container."""
+    knows), else the native codecs (PPM/BMP, full-matrix PNG,
+    single-frame GIF), else a NotImplementedError naming the missing
+    dependency."""
     img_mod = _pillow()
     if img_mod is not None:
         import io as _io
@@ -3049,11 +605,9 @@ def _real_decode(b: bytes) -> np.ndarray:
         return _numpy_decode(b)
     except NotImplementedError as e:
         raise NotImplementedError(
-            f"{e} — hierarchical/lossless-arithmetic JPEG requires "
-            "Pillow (not importable in this container); PPM, BMP, "
-            "full-matrix PNG, single-frame GIF, and baseline (incl. "
-            "12-bit) + progressive + lossless SOF3 + arithmetic "
-            "SOF9/SOF10 JPEG decode natively without it"
+            f"{e} — Pillow is not importable in this container; PPM, "
+            "BMP, full-matrix PNG and single-frame GIF decode natively "
+            "without it"
         ) from None
 
 
@@ -3061,11 +615,11 @@ def decode_image(df: DataFrame, codec: str = "fake") -> DataFrame:
     """payload → (width, height, n_bytes, checksum) metadata frame.
 
     Codecs: ``"fake"`` (digest-derived dims, any payload), ``"numpy"``
-    (REAL decode of uncompressed PPM/BMP — header parse + reshape, no
-    image library), ``"real"`` (best available: Pillow when importable
-    in the worker process — any format it knows — else the numpy
-    codecs; compressed formats without Pillow raise at the disclosed
-    seam inside the UDF)."""
+    (REAL decode of PPM/BMP, PNG and single-frame GIF, no image
+    library), ``"real"`` (best available: Pillow when importable in
+    the worker process — any format it knows — else the numpy codecs;
+    any other format without Pillow, JPEG included, raises at the
+    disclosed seam inside the UDF)."""
     if codec not in ("fake", "numpy", "real"):
         raise ValueError(f"unknown codec: {codec}")
 

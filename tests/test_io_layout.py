@@ -589,37 +589,6 @@ def test_snapshot_time_travel_rejects_uncommitted_version(spark, tmp_path):
         read_snapshot(spark, root, version=1)
 
 
-def test_bloom_filter_cols_write_real_bitsets(spark, tmp_path):
-    """bloom_filter_cols must add a parquet bloom filter per column:
-    same data written with and without the option differs by the bitset
-    bytes (pyarrow 16 exposes no bloom metadata, so the size delta is
-    the observable), and the data itself round-trips identically."""
-    import glob
-    import os
-
-    from opentimes_spark.io.write import write_sorted_partitioned
-
-    df = spark.range(2000).selectExpr(
-        "cast(id as string) AS origin_id",
-        "cast(id * 7 % 2000 as string) AS destination_id",
-        "cast(id as double) AS duration_sec",
-    )
-    plain = str(tmp_path / "plain")
-    bloomed = str(tmp_path / "bloomed")
-    write_sorted_partitioned(df, plain, order_by=["origin_id"])
-    write_sorted_partitioned(
-        df, bloomed, order_by=["origin_id"],
-        bloom_filter_cols=["destination_id"], bloom_filter_ndv=2000,
-    )
-    size = lambda d: sum(
-        os.path.getsize(p) for p in glob.glob(os.path.join(d, "part-*.parquet"))
-    )
-    assert size(bloomed) > size(plain), "bloom bitset must be written"
-    a = sorted(map(tuple, spark.read.parquet(plain).collect()))
-    b = sorted(map(tuple, spark.read.parquet(bloomed).collect()))
-    assert a == b
-
-
 def test_diff_snapshots_classifies_and_disambiguates_nulls(spark, tmp_path):
     """Version diff (round 9): added/removed/changed classification off
     the retained versions; the fingerprint must distinguish NULL from

@@ -46,9 +46,20 @@ def test_cli_chunk_slice(spark, tmp_path):
     assert summary["n_times"] + summary["n_missing"] == 6
 
 
-def test_cli_rejects_bad_chunk():
+@pytest.mark.parametrize("chunk", ["3-1_0-3", "0-3_2-2", "nope"])
+def test_cli_rejects_bad_chunk(chunk, capsys):
     with pytest.raises(SystemExit):
-        parse_args(["--demo", "--out", "/tmp/x", "--chunk", "nope"])
+        parse_args(["--demo", "--out", "/tmp/x", "--chunk", chunk])
+    assert repr(chunk) in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("size", ["0", "-1"])
+def test_cli_rejects_max_split_size_below_one(size, capsys):
+    """A step of 0 fails inside a worker and a negative step routes no
+    pair, so the CLI refuses both before any Spark work."""
+    with pytest.raises(SystemExit):
+        parse_args(["--demo", "--out", "/tmp/x", "--max-split-size", size])
+    assert "--max-split-size" in capsys.readouterr().err
 
 
 def _counting_router(cells):

@@ -91,6 +91,15 @@ def test_tiling_respects_max_split_size(spark):
     assert as_map(whole) == as_map(tiled)
 
 
+@pytest.mark.parametrize("size", [0, -1])
+def test_max_split_size_below_one_is_refused(spark, size):
+    """A tile step of 0 fails inside a worker and a negative one routes
+    no pair; the operator refuses both on the driver, at call time."""
+    o = _points(spark, [("x", 10.0, 10.0)])
+    with pytest.raises(ValueError, match="max_split_size"):
+        travel_time_matrix(o, o, HaversineRouter, max_split_size=size)
+
+
 def test_oversized_destinations_raise_not_oom(spark):
     """The destination side is driver-collected + broadcast; above the
     cap the operator must refuse with guidance instead of OOMing."""

@@ -38,9 +38,8 @@ def test_decode_deterministic(spark, media):
 
 def test_real_codec_seam_raises_on_compressed_without_pillow(media):
     """'real' degrades to the native codecs in a Pillow-less container —
-    an ARITHMETIC-CODED JPEG payload (the remaining seam now that both
-    baseline and progressive Huffman JPEG decode natively) hits the
-    disclosed NotImplementedError."""
+    a JPEG payload (no native JPEG codec) hits the disclosed
+    NotImplementedError."""
     import struct
 
     import opentimes_spark.operators.multimodal as mm
@@ -241,13 +240,12 @@ def test_numpy_codec_rejects_compressed():
 
     from opentimes_spark.operators.multimodal import _numpy_decode
 
-    # lossless-arithmetic JPEG (SOF11) is a remaining seam; baseline,
-    # progressive, and arithmetic SOF9/SOF10 now decode natively
-    arithmetic = (
-        b"\xff\xd8\xff\xcb" + struct.pack(">H", 8) + b"\x08\x00\x01\x00\x01\x01"
-    )
-    with pt.raises(NotImplementedError, match="Pillow"):
-        _numpy_decode(arithmetic)
+    # JPEG has no native codec: a baseline (SOF0) and a
+    # lossless-arithmetic (SOF11) header both meet the Pillow seam
+    sof = struct.pack(">H", 8) + b"\x08\x00\x01\x00\x01\x01"
+    for marker in (b"\xc0", b"\xcb"):
+        with pt.raises(NotImplementedError, match="Pillow"):
+            _numpy_decode(b"\xff\xd8\xff" + marker + sof)
     # an unknown magic stays a hard seam too
     with pt.raises(NotImplementedError, match="Pillow"):
         _numpy_decode(b"II*\x00notatiffreally")
@@ -495,233 +493,6 @@ def test_numpy_codec_decodes_gif_payload_in_spark(spark):
     )
     r = decode_image(df, codec="numpy").collect()[0]
     assert (r["width"], r["height"]) == (17, 6)
-
-
-def test_jpeg_round_trip_solid_and_gradient():
-    """Lossy round-trip: solid colors reconstruct (near-)exactly; a
-    smooth gradient at quality 90 stays within a tight mean-abs-error
-    bound in both 4:4:4 and 4:2:0 (chroma subsampling costs a little
-    color accuracy, never luma structure)."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    solid = np.full((16, 16, 3), [120, 64, 200], dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(solid, quality=95))
-    assert out.shape == solid.shape
-    assert np.abs(out.astype(int) - solid.astype(int)).mean() < 1.0
-
-    x = np.linspace(0, 255, 37)
-    y = np.linspace(0, 255, 29)
-    g = np.stack(np.meshgrid(x, y), -1)
-    grad = np.concatenate([g, (g[..., :1] + g[..., 1:2]) / 2], -1).astype(
-        np.uint8
-    )
-    for subsample, bound in [(False, 2.0), (True, 4.0)]:
-        out = decode_jpeg(encode_jpeg(grad, quality=90, subsample=subsample))
-        assert out.shape == grad.shape  # odd dims crop back exactly
-        assert np.abs(out.astype(int) - grad.astype(int)).mean() < bound
-
-
-def test_jpeg_grayscale_q100_near_lossless():
-    """Single-component scan; at quality 100 every quant divisor is 1 so
-    the only loss is DCT rounding (< 0.5 MAE even on noise)."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, (24, 31), dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(img, quality=100))
-    assert out.shape == img.shape
-    assert np.abs(out.astype(int) - img.astype(int)).mean() < 0.5
-
-
-def test_jpeg_restart_markers_decode_identically():
-    """DRI/RSTn: a stream with restart markers every 2 MCUs decodes to
-    the same pixels as the unrestarted stream (predictors reset, byte
-    realignment, marker sequence numbers all exercised)."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, (33, 41, 3), dtype=np.uint8)
-    with_rst = decode_jpeg(
-        encode_jpeg(img, quality=85, subsample=True, restart_interval=2)
-    )
-    without = decode_jpeg(encode_jpeg(img, quality=85, subsample=True))
-    assert np.array_equal(with_rst, without)
-
-
-def test_progressive_jpeg_matches_baseline_exactly():
-    """The progressive encoder quantizes to the SAME coefficients as the
-    baseline encoder, so a correct SOF2 decode (multi-scan spectral
-    selection + successive approximation) must reproduce the baseline
-    decode bit-for-bit — across gray/RGB, 4:4:4/4:2:0, and qualities."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(8)
-    for q in (10, 75, 95):
-        for shape, color, sub in [
-            ((16, 16), False, False),
-            ((9, 13), False, False),
-            ((24, 17, 3), True, False),
-            ((33, 26, 3), True, True),
-        ]:
-            img = rng.randint(0, 256, shape).astype(np.uint8)
-            base = decode_jpeg(encode_jpeg(img, quality=q, subsample=sub))
-            prog = decode_jpeg(
-                encode_jpeg_progressive(img, quality=q, subsample=sub)
-            )
-            assert np.array_equal(base, prog), (q, shape, sub)
-
-
-def test_progressive_jpeg_restart_markers():
-    """RSTn inside progressive scans: DC predictors, EOB runs, and bit
-    alignment all reset per interval; decode equals the unrestarted
-    stream."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(9)
-    img = rng.randint(0, 256, (33, 41, 3), dtype=np.uint8)
-    with_rst = decode_jpeg(
-        encode_jpeg_progressive(img, quality=85, restart_interval=2)
-    )
-    without = decode_jpeg(encode_jpeg_progressive(img, quality=85))
-    assert np.array_equal(with_rst, without)
-
-
-def test_progressive_jpeg_custom_scan_script_and_truncation():
-    """A nonstandard scan script (3-level DC successive approximation,
-    odd AC band splits) still reconstructs exactly; a truncated
-    progressive stream raises instead of looping or wrapping."""
-    import numpy as np
-    import pytest as pt
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(10)
-    img = rng.randint(0, 256, (21, 35, 3), dtype=np.uint8)
-    script = [
-        ([0, 1, 2], 0, 0, 0, 3),
-        ([0, 1, 2], 0, 0, 3, 2),
-        ([0], 1, 2, 0, 0),
-        ([1], 1, 63, 0, 0),
-        ([2], 1, 63, 0, 0),
-        ([0], 3, 63, 0, 0),
-        ([0, 1, 2], 0, 0, 2, 1),
-        ([0, 1, 2], 0, 0, 1, 0),
-    ]
-    base = decode_jpeg(encode_jpeg(img, quality=85, subsample=True))
-    prog = decode_jpeg(
-        encode_jpeg_progressive(img, quality=85, subsample=True, scans=script)
-    )
-    assert np.array_equal(base, prog)
-    full = encode_jpeg_progressive(img, quality=85)
-    with pt.raises(ValueError):
-        decode_jpeg(full[: len(full) * 2 // 3])
-    # T.81 G.1.1.1.1: an interleaved AC scan is illegal — the encoder
-    # must refuse the script, not emit a silently corrupt stream
-    bad = [([0, 1, 2], 0, 0, 0, 0), ([0, 1], 1, 63, 0, 0)]
-    with pt.raises(ValueError, match="single-component"):
-        encode_jpeg_progressive(img, quality=85, scans=bad)
-
-
-def test_progressive_jpeg_through_spark_decode(spark):
-    """SOF2 payloads decode through the numpy codec in the
-    mapInPandas pipeline (same plumbing as the baseline test)."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_image,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(11)
-    rows = []
-    for i in range(4):
-        img = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
-        rows.append(
-            (
-                i,
-                "image",
-                bytearray(encode_jpeg_progressive(img, quality=90)),
-                "image/jpeg",
-            )
-        )
-    df = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary, mime string"
-    )
-    out = {r["media_id"]: (r["width"], r["height"]) for r in
-           decode_image(df, codec="numpy").collect()}
-    assert out == {i: (16, 16) for i in range(4)}
-
-
-def test_jpeg_rejects_progressive_truncated_and_non_jpeg():
-    import struct
-
-    import numpy as np
-    import pytest as pt
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    with pt.raises(ValueError, match="not a JPEG"):
-        decode_jpeg(b"P6\n1 1\n255\nxxx")
-    # progressive (SOF2) decodes natively as of round 8, lossless
-    # (SOF3) as of round 9, arithmetic SOF9/SOF10 as of round 10;
-    # lossless-arithmetic (SOF11) stays a seam
-    arith = (
-        b"\xff\xd8\xff\xcb" + struct.pack(">H", 8) + b"\x08\x00\x01\x00\x01\x01"
-    )
-    with pt.raises(NotImplementedError, match="SOF11"):
-        decode_jpeg(arith)
-    good = encode_jpeg(np.full((8, 8), 77, dtype=np.uint8), quality=90)
-    with pt.raises(ValueError):
-        decode_jpeg(good[: len(good) // 2])  # truncated entropy stream
-
-
-def test_numpy_codec_decodes_jpeg_payload_in_spark(spark):
-    """End-to-end: baseline JPEG payloads flow through decode_image's
-    Arrow-batched mapInPandas with codec='numpy' — dimensions come from
-    the real SOF0 header, not the payload digest."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image,
-        encode_jpeg,
-    )
-
-    rng = np.random.RandomState(5)
-    rows = []
-    dims = [(20, 13), (8, 8), (31, 17)]
-    for i, (w, h) in enumerate(dims):
-        img = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
-        rows.append(
-            (i, "image", bytearray(encode_jpeg(img, quality=90)), "image/jpeg")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {
-        r["media_id"]: (r["width"], r["height"])
-        for r in decode_image(df, codec="numpy").collect()
-    }
-    assert got == {i: d for i, d in enumerate(dims)}
 
 
 def test_resize_bilinear_antialiases_vs_nearest(spark):
@@ -978,369 +749,6 @@ def test_png_invalid_combos_raise():
     raw = _png_filter_rows([_png_pack_row(r, 8) for r in idx], 1)
     with pt.raises(ValueError, match="palette index"):
         decode_png(_build_png(1, 1, 8, 3, raw, plte=plte))
-
-
-def test_jpeg_lossless_roundtrip_exact_all_predictors():
-    """SOF3 lossless: decode(encode(x)) must reproduce the input
-    BIT-FOR-BIT for every predictor selector 1-7 — the defining
-    property of the Annex-H process (no quantization, no DCT)."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(31)
-    img = rng.randint(0, 256, (13, 19)).astype(np.uint8)
-    for pred in range(1, 8):
-        out = decode_jpeg(encode_jpeg_lossless(img, predictor=pred))
-        assert out.dtype == np.uint8 and np.array_equal(out, img), pred
-
-
-def test_jpeg_lossless_high_precision_and_point_transform():
-    """12/16-bit lossless with multi-channel interleave and point
-    transform: output is uint16 and equals the Pt-truncated input
-    exactly ((x >> Pt) << Pt)."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(32)
-    for prec, pt_, shape in [
-        (12, 0, (7, 11)),
-        (16, 0, (6, 9, 3)),
-        (16, 3, (5, 8, 2)),
-        (12, 2, (1, 17)),
-    ]:
-        img = rng.randint(0, 1 << prec, shape).astype(np.uint16)
-        blob = encode_jpeg_lossless(
-            img, predictor=4, point_transform=pt_, precision=prec
-        )
-        out = decode_jpeg(blob)
-        want = ((img.astype(np.int32) >> pt_) << pt_).astype(np.uint16)
-        assert out.dtype == np.uint16
-        assert np.array_equal(out, want), (prec, pt_, shape)
-
-
-def test_jpeg_lossless_restart_intervals():
-    """RSTn in a lossless scan resets the predictor to the scan-start
-    state (T.81 H.2.2); the round-trip stays exact at every interval
-    including intervals that split rows mid-line."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(33)
-    img = rng.randint(0, 256, (11, 7, 3)).astype(np.uint8)
-    for ri in (1, 3, 5, 76):
-        blob = encode_jpeg_lossless(img, predictor=7, restart_interval=ri)
-        assert np.array_equal(decode_jpeg(blob), img), ri
-
-
-def test_jpeg_12bit_sequential_roundtrip():
-    """Extended sequential at 12-bit precision (SOF1, 16-bit DQT,
-    optimized DHT): decodes to uint16 with quantization error that
-    scales with the x16 table scaling — pinned against the 8-bit
-    encode of the same (scaled) image."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    yy, xx = np.mgrid[0:24, 0:40]
-    base = yy * 30 + xx * 20  # smooth, no wraparound
-    img12 = np.stack(
-        [base, base // 2 + 300, 3000 - base // 2], axis=-1
-    ).astype(np.uint16)
-    for sub in (False, True):
-        out = decode_jpeg(
-            encode_jpeg(img12, quality=95, subsample=sub, precision=12)
-        )
-        assert out.dtype == np.uint16 and out.shape == img12.shape
-        err12 = np.abs(out.astype(np.int64) - img12.astype(np.int64))
-        img8 = (img12 >> 4).astype(np.uint8)
-        out8 = decode_jpeg(encode_jpeg(img8, quality=95, subsample=sub))
-        err8 = np.abs(out8.astype(np.int64) - img8.astype(np.int64))
-        # 12-bit error, rescaled to 8-bit units, stays within the 8-bit
-        # error envelope plus rounding slack
-        assert err12.max() / 16.0 <= err8.max() + 2.0, sub
-
-    # grayscale + restart markers: decode equals the unrestarted stream
-    g = (base % 4096).astype(np.uint16)
-    a = decode_jpeg(
-        encode_jpeg(g, quality=90, precision=12, restart_interval=2)
-    )
-    b = decode_jpeg(encode_jpeg(g, quality=90, precision=12))
-    assert np.array_equal(a, b)
-
-
-def test_jpeg_12bit_input_validation():
-    import numpy as np
-    import pytest as pt
-
-    from opentimes_spark.operators.multimodal import (
-        encode_jpeg,
-        encode_jpeg_lossless,
-    )
-
-    with pt.raises(ValueError, match="needs uint16"):
-        encode_jpeg(np.zeros((4, 4), np.uint8), precision=12)
-    with pt.raises(ValueError, match="exceeds 4095"):
-        encode_jpeg(np.full((4, 4), 4096, np.uint16), precision=12)
-    with pt.raises(ValueError, match="precision must be 8 or 12"):
-        encode_jpeg(np.zeros((4, 4), np.uint8), precision=10)
-    with pt.raises(ValueError, match="predictor"):
-        encode_jpeg_lossless(np.zeros((4, 4), np.uint8), predictor=8)
-    with pt.raises(ValueError, match="point transform"):
-        encode_jpeg_lossless(np.zeros((4, 4), np.uint8), point_transform=8)
-    with pt.raises(ValueError, match="declared precision"):
-        encode_jpeg_lossless(
-            np.full((4, 4), 255, np.uint8), precision=4
-        )
-
-
-def test_qm_coder_roundtrip_property():
-    """The T.81 Annex-D QM arithmetic coder: encode→decode is exact on
-    random decision streams across biases, context counts, and lengths
-    — exercises renormalization, conditional exchange, carry
-    resolution over stacked 0xFF bytes, and the marker-tail zero feed."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import _QMDecoder, _QMEncoder
-
-    rng = np.random.default_rng(42)
-    for _ in range(25):
-        n_ctx = int(rng.integers(1, 20))
-        n = int(rng.integers(1, 4000))
-        ctxs = rng.integers(0, n_ctx, n)
-        p = rng.uniform(0.01, 0.99)
-        bits = (rng.random(n) < p).astype(int)
-        enc = _QMEncoder()
-        st_e = bytearray(n_ctx)
-        for c, bit in zip(ctxs, bits):
-            enc.encode(st_e, int(c), int(bit))
-        payload = enc.flush()
-        dec = _QMDecoder(payload, 0)
-        st_d = bytearray(n_ctx)
-        assert [dec.decode(st_d, int(c)) for c in ctxs] == bits.tolist()
-
-
-def test_qm_coder_near_entropy():
-    """Adaptation sanity: a heavily biased stream compresses to within
-    ~25% of the binary entropy bound (a broken estimation table codes
-    ~1+ bit/decision and fails this by an order of magnitude)."""
-    import math
-
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import _QMEncoder
-
-    rng = np.random.default_rng(3)
-    p = 0.05
-    bits = (rng.random(10000) < p).astype(int)
-    enc = _QMEncoder()
-    st = bytearray(1)
-    for bit in bits:
-        enc.encode(st, 0, int(bit))
-    out = enc.flush()
-    ideal = 10000 * -(p * math.log2(p) + (1 - p) * math.log2(1 - p)) / 8
-    assert len(out) < ideal * 1.25
-
-
-def test_jpeg_arithmetic_equals_huffman():
-    """SOF9 arithmetic entropy coding is lossless: decoding the
-    arithmetic stream yields pixels IDENTICAL to the Huffman stream of
-    the same quantized coefficients — across gray/color, 4:2:0/4:4:4,
-    qualities, restart intervals, and odd sizes."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_arithmetic,
-    )
-
-    yy, xx = np.mgrid[0:80, 0:88]
-    base = (128 + 90 * np.sin(xx / 11.0) * np.cos(yy / 13.0)).astype(np.uint8)
-    color = np.stack([base, 255 - base, np.roll(base, 7, 1)], axis=-1)
-    for ri in (0, 3):
-        for im, sub in ((base, False), (color, True), (color, False)):
-            bh = encode_jpeg(im, quality=75, subsample=sub,
-                             restart_interval=ri)
-            ba = encode_jpeg_arithmetic(im, quality=75, subsample=sub,
-                                        restart_interval=ri)
-            assert np.array_equal(decode_jpeg(bh), decode_jpeg(ba))
-    rng = np.random.default_rng(9)
-    for shape in ((1, 1), (7, 5), (17, 33, 3)):
-        im = rng.integers(0, 256, shape).astype(np.uint8)
-        sub = len(shape) == 3
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg(im, quality=90, subsample=sub)),
-            decode_jpeg(encode_jpeg_arithmetic(im, quality=90,
-                                               subsample=sub)),
-        )
-
-
-def test_jpeg_arithmetic_beats_huffman_size():
-    """On a smooth image the adaptive QM contexts beat the fixed
-    Annex-K Huffman tables outright — the reason SOF9 exists."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        encode_jpeg,
-        encode_jpeg_arithmetic,
-    )
-
-    yy, xx = np.mgrid[0:96, 0:128]
-    img = np.stack(
-        [
-            128 + 100 * np.sin(xx / 19.0) * np.cos(yy / 23.0),
-            128 + 80 * np.cos(xx / 31.0 + yy / 17.0),
-            np.clip(xx * 2 - yy, 0, 255),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-    bh = encode_jpeg(img, quality=80)
-    ba = encode_jpeg_arithmetic(img, quality=80)
-    assert len(ba) < len(bh)
-
-
-def test_jpeg_progressive_arithmetic_equals_baseline():
-    """SOF10 progressive-arithmetic decode reproduces the baseline
-    Huffman decode bit-for-bit (shared quantized coefficients) across
-    gray/color, subsampling, restart intervals, odd sizes, and a
-    custom scan script."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive_arithmetic,
-    )
-
-    yy, xx = np.mgrid[0:80, 0:88]
-    base = (128 + 90 * np.sin(xx / 11.0) * np.cos(yy / 13.0)).astype(np.uint8)
-    color = np.stack([base, 255 - base, np.roll(base, 7, 1)], axis=-1)
-    for ri in (0, 3):
-        for im, sub in ((base, False), (color, True), (color, False)):
-            bh = encode_jpeg(im, quality=75, subsample=sub)
-            ba = encode_jpeg_progressive_arithmetic(
-                im, quality=75, subsample=sub, restart_interval=ri
-            )
-            assert np.array_equal(decode_jpeg(bh), decode_jpeg(ba))
-    rng = np.random.default_rng(5)
-    for shape in ((1, 1), (7, 5), (17, 33, 3)):
-        im = rng.integers(0, 256, shape).astype(np.uint8)
-        sub = len(shape) == 3
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg(im, quality=90, subsample=sub)),
-            decode_jpeg(
-                encode_jpeg_progressive_arithmetic(
-                    im, quality=90, subsample=sub
-                )
-            ),
-        )
-    # a custom script exercising deep successive approximation
-    script = [
-        ([0], 0, 0, 0, 3),
-        ([0], 1, 63, 0, 2),
-        ([0], 0, 0, 3, 2),
-        ([0], 1, 63, 2, 1),
-        ([0], 0, 0, 2, 1),
-        ([0], 1, 63, 1, 0),
-        ([0], 0, 0, 1, 0),
-    ]
-    ba = encode_jpeg_progressive_arithmetic(
-        base, quality=75, subsample=False, scans=script
-    )
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg(base, quality=75, subsample=False)),
-        decode_jpeg(ba),
-    )
-
-
-def test_decode_jpeg_multi_scan_sequential():
-    """T.81 allows ONE SOS per component in sequential mode; the marker
-    loop used to break on the first SOS, silently leaving the other
-    component planes at zero.  Build a 3-scan 4:4:4 stream from the
-    same quantized blocks as the interleaved encode and demand pixel
-    equality."""
-    import struct
-
-    import numpy as np
-
-    from opentimes_spark.operators import multimodal as M
-
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, (24, 24, 3), np.uint8)
-    ref = M.decode_jpeg(M.encode_jpeg(img, quality=85, subsample=False))
-    gray, h, w, samp, qt_l, qt_c, mr, mc, zzs = M._jpeg_quantized(
-        img, 85, False, 8
-    )
-    assert not gray and samp == [(1, 1)] * 3
-    codes = {
-        (0, 0): M._canonical_codes(*M._HT_DC_LUMA),
-        (1, 0): M._canonical_codes(*M._HT_AC_LUMA),
-        (0, 1): M._canonical_codes(*M._HT_DC_CHROMA),
-        (1, 1): M._canonical_codes(*M._HT_AC_CHROMA),
-    }
-
-    def seg(m, p):
-        return struct.pack(">HH", m, len(p) + 2) + p
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(
-        0xFFDB, bytes([0]) + bytes(qt_l.astype(np.uint8).ravel()[M._ZIGZAG])
-    )
-    out += seg(
-        0xFFDB, bytes([1]) + bytes(qt_c.astype(np.uint8).ravel()[M._ZIGZAG])
-    )
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for ci in range(3):
-        sof += struct.pack(">BBB", ci + 1, 0x11, 0 if ci == 0 else 1)
-    out += seg(0xFFC0, sof)
-    for cls, dest, (tb, tv) in (
-        (0, 0, M._HT_DC_LUMA), (1, 0, M._HT_AC_LUMA),
-        (0, 1, M._HT_DC_CHROMA), (1, 1, M._HT_AC_CHROMA),
-    ):
-        out += seg(0xFFC4, bytes([(cls << 4) | dest] + list(tb) + list(tv)))
-    for ci in range(3):
-        cls = 0 if ci == 0 else 1
-        bw = M._BitWriter()
-        M._seq_scan_pass(
-            [zzs[ci]], [(1, 1)], mr, mc, 0,
-            [M._HuffEmitter(bw, codes[(0, cls)])],
-            [M._HuffEmitter(bw, codes[(1, cls)])],
-        )
-        sos = bytes([1, ci + 1, 0 if ci == 0 else 0x11]) + b"\x00\x3f\x00"
-        out += seg(0xFFDA, sos) + bw.flush()
-    out += b"\xff\xd9"
-    got = M.decode_jpeg(bytes(out))
-    assert np.array_equal(got, ref)
-
-
-def test_decode_jpeg_header_fill_bytes():
-    """T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker
-    between segments — decode must skip them, not parse them as a
-    marker/length."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, (16, 16, 3), np.uint8)
-    b = encode_jpeg(img, quality=80)
-    plain = decode_jpeg(b)
-    i = b.index(b"\xff\xdb")  # first DQT
-    filled = b[:i] + b"\xff\xff\xff" + b[i:]  # three fill bytes
-    assert np.array_equal(decode_jpeg(filled), plain)
 
 
 def test_resize_images_gray_rgba_payloads(spark):

@@ -396,66 +396,6 @@ def test_gif_round_trip_property(h, w, n_colors, seed):
     assert (out == pal[idx]).all()
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    h=st.integers(1, 24),
-    w=st.integers(1, 24),
-    gray=st.booleans(),
-    subsample=st.booleans(),
-    quality=st.integers(55, 100),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_round_trip_error_bounded(h, w, gray, subsample, quality, seed):
-    """Property: for ANY image shape (including 1×1 and non-multiples
-    of the MCU size), gray/RGB, 4:2:0/4:4:4, quality 55–100, the
-    baseline JPEG round-trip (a) decodes to the exact input shape and
-    (b) keeps mean absolute error within the quantization-scale bound
-    — the codec never crashes, never mis-crops, never goes wild."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    # piecewise-smooth content: random low-res field upsampled — the
-    # realistic case where JPEG's error bound is meaningful (pure
-    # noise saturates the high-frequency quantizers by design)
-    low = rng.randint(0, 256, size=(max(1, h // 8), max(1, w // 8)) + shape[2:])
-    img = np.kron(low, np.ones((8, 8) + (1,) * (len(shape) - 2))).astype(
-        np.uint8
-    )[:h, :w]
-    out = decode_jpeg(
-        encode_jpeg(img, quality=quality, subsample=subsample)
-    )
-    assert out.shape == img.shape
-    mae = np.abs(out.astype(int) - img.astype(int)).mean()
-    # blocky-constant content quantizes near-perfectly at q>=55; chroma
-    # subsampling adds bounded color bleed at block edges
-    assert mae < 20.0, (mae, h, w, gray, subsample, quality)
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    n=st.integers(1, 300),
-    k=st.integers(1, 8),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_restart_interval_never_changes_pixels(n, k, seed):
-    """Property: restart markers are a pure framing feature — for any
-    image and any restart interval, decoded pixels equal the
-    unrestarted stream's."""
-    import numpy as np
-
-    from opentimes_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(seed)
-    h, w = 8 + n % 24, 8 + (n * 7) % 24
-    img = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
-    plain = decode_jpeg(encode_jpeg(img, quality=80))
-    rst = decode_jpeg(encode_jpeg(img, quality=80, restart_interval=k))
-    assert np.array_equal(plain, rst)
-
-
 @settings(max_examples=200, deadline=None)
 @given(
     edges=st.lists(
